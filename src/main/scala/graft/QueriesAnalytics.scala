@@ -950,7 +950,7 @@ private[graft] object QueriesAnalytics {
         val ev = Tables.events(s, d)
         val cut = ev.agg(date_sub(max(to_date(col("ts"))), 7).as("cut"))
         val tagged = ev.crossJoin(broadcast(cut))
-        Rings.releaseCache()
+        graft.util.CacheRegistry.release(Rings)
         val base = Rings.pairDeviceStore(
           tagged.filter(to_date(col("ts")) <= col("cut")), releaseFirst = false)
         val delta = Rings.pairDeviceStore(

@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -23,28 +24,6 @@ import org.apache.spark.sql.functions._
 object Attribution {
 
   private val DayUs = 86400000000L
-
-  // shapley's mask-grain frame (≤ 2^k − 1 rows) feeds THREE lattice
-  // consumers (v(S) via s0 and s1, journeys_touched) — without a persist
-  // each re-derives the corpus-sized purchase×touch pairing. Same
-  // cache-lifecycle contract as Basket.releaseCache. SINGLE-LIVE-FRAME
-  // limitation: releaseCache() at the top of each shapley() call
-  // unpersists the PREVIOUS frame's maskAgg, so when two shapley frames
-  // coexist (e.g. the registered attribution_shapley mart view plus a
-  // later direct call) the older one silently recomputes the pairing on
-  // each consumer — correct results, just without the compute-once
-  // property. Callers needing coexisting frames should execute each
-  // frame fully before constructing the next.
-  @volatile private var caches: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    caches.foreach(_.unpersist(blocking = false))
-    caches = Nil
-  }
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { caches = p :: caches }
-    p
-  }
 
   /** One row per (purchase, touch) with linear credit and first/last
     * flags. Deterministic: touch order is (ts_us, event_id). */
@@ -225,9 +204,17 @@ object Attribution {
       .agg(max(col("value_micro")).as("value_micro"),
         expr("bit_or(shiftleft(1, ch_idx))").cast("int").as("mask"))
     // mask grain: ≤ 2^k − 1 rows — the bounded state everything below
-    // rides; persisted so the corpus pairing above runs exactly once
-    releaseCache()
-    val maskAgg = persisted(journeys.groupBy("mask")
+    // rides; persisted so the corpus pairing above runs exactly once (it
+    // feeds THREE lattice consumers: v(S) via s0 and s1, journeys_touched).
+    // SINGLE-LIVE-FRAME limitation: each call releases the PREVIOUS call's
+    // maskAgg, so when two shapley frames coexist (e.g. the registered
+    // attribution_shapley mart view plus a later direct call) the older
+    // one silently recomputes the pairing on each consumer — correct
+    // results, just without the compute-once property. Callers needing
+    // coexisting frames should execute each frame fully before
+    // constructing the next.
+    CacheRegistry.release(Attribution)
+    val maskAgg = CacheRegistry.persist(Attribution, journeys.groupBy("mask")
       .agg(sum("value_micro").as("v_micro"), count(lit(1)).as("n_journeys")))
     val lattice = spark.range(1 << k).select(col("id").cast("int").as("cs"))
     // v(S) = Σ_{mask ⊆ S} v_micro(mask): a 2^k × 2^k containment join of

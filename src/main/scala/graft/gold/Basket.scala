@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -33,22 +34,6 @@ import org.apache.spark.sql.functions._
   */
 object Basket {
 
-  // The basket-grain frame feeds FIVE consumers (pair generation, both
-  // marginal joins via itemCounts, N) and the pair frame feeds both rule
-  // directions — without persists each re-derives from the fact scan
-  // (5 corpus scans at 100 TB). Same cache-lifecycle contract as
-  // Rings.admittedCaches.
-  @volatile private var caches: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    caches.foreach(_.unpersist(blocking = false))
-    caches = Nil
-  }
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { caches = p :: caches }
-    p
-  }
-
   /** Association rules over order baskets of part brands.
     *
     * @param minPairSupport minimum co-occurrence count for a pair to
@@ -68,10 +53,14 @@ object Basket {
         col("p_brand").as("item"))), Seq("l_partkey"))
       .select("ok", "item").distinct()
 
-    releaseCache()
+    // The basket-grain frame feeds FIVE consumers (pair generation, both
+    // marginal joins via itemCounts, N) and the pair frame feeds both rule
+    // directions — without persists each re-derives from the fact scan
+    // (5 corpus scans at 100 TB).
+    CacheRegistry.release(Basket)
     // One shuffle to basket grain; the governor filter sees only the
     // bounded array size, never a pair.
-    val baskets = persisted(items.groupBy("ok")
+    val baskets = CacheRegistry.persist(Basket, items.groupBy("ok")
       .agg(sort_array(collect_set(col("item"))).as("bs"))
       .filter(size(col("bs")).between(2, maxBasket)))
 
@@ -83,7 +72,7 @@ object Basket {
     // Row-local C(m,2) pair generation over the sorted basket array:
     // i-th item pairs with every later item (arrays are 1-based in
     // slice, 0-based in the lambda index).
-    val pairs = persisted(baskets.select(explode(expr(
+    val pairs = CacheRegistry.persist(Basket, baskets.select(explode(expr(
         "flatten(transform(bs, (x, i) -> " +
           "transform(slice(bs, i + 2, size(bs)), " +
           "y -> named_struct('ia', x, 'ib', y))))")).as("p"))

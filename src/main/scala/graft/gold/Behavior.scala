@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -98,7 +99,7 @@ object Behavior {
             col("ts_us"))).over(w))
     }
     val last = s"t${stages.size - 1}"
-    val perUser = ScalableRank.persistTracked(withTimes
+    val perUser = CacheRegistry.persist(ScalableRank, withTimes
       .groupBy("user_id")
       .agg(min(col("t0")).as("t0"), min(col(last)).as("t_last"))
       .filter(col("t_last").isNotNull)

@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.{CacheRegistry, Lineage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,15 +47,6 @@ object Graph {
   val Damping = 85 // percent
   val Iterations = 5
 
-  @volatile private var lastOriented: Option[DataFrame] = None
-  @volatile private var lastGraph: List[DataFrame] = Nil
-  def releaseCache(): Unit = {
-    lastOriented.foreach(graft.util.Lineage.release)
-    lastOriented = None
-    lastGraph.foreach(graft.util.Lineage.release)
-    lastGraph = Nil
-  }
-
   /** Integer-exact PageRank over an undirected pair list (user_a < user_b).
     * Returns (user_id, degree, pr_units BIGINT, pr_score DOUBLE). */
   def pageRank(pairs: DataFrame, iterations: Int = Iterations): DataFrame = {
@@ -67,14 +59,14 @@ object Graph {
     // materialization re-walk a ~30 k-node tree. Truncation keeps the
     // static plan linear in the round count. Partition width still derives
     // from row counts (rightsize semantics), never from the machine.
-    releaseCache()
-    val edges0 = graft.util.Lineage.checkpointRightsized(
+    CacheRegistry.release(Graph)
+    val edges0 = Lineage.checkpointRightsized(
       pairs.select(col("user_a").as("src"), col("user_b").as("dst"))
         .union(pairs.select(col("user_b").as("src"), col("user_a").as("dst"))))
     val deg = edges0.groupBy(col("src")).agg(count(lit(1)).as("s_degree"))
     val n = deg.agg(count(lit(1)).as("n"))
     // pr0 and the teleport term are integer functions of N alone.
-    val nodes = graft.util.Lineage.checkpointRightsized(
+    val nodes = CacheRegistry.checkpoint(Graph,
       deg.crossJoin(broadcast(n))
         .withColumn("pr0", expr(s"${MassUnits}L div n"))
         .withColumn("tele", expr(s"(15 * (${MassUnits}L div n)) div 100"))
@@ -86,11 +78,10 @@ object Graph {
     // nodes⋈contrib join — one exchange per iteration — is redundant;
     // grouping by (dst, degree, tele) off the enriched edges yields the
     // identical integer state.
-    val edges = graft.util.Lineage.checkpointRightsized(
+    val edges = CacheRegistry.checkpoint(Graph,
       edges0.join(nodes.select(col("node").as("dst"),
           col("degree").as("d_degree"), col("tele").as("d_tele")), Seq("dst")))
-    graft.util.Lineage.release(edges0)
-    lastGraph = List(edges, nodes)
+    Lineage.release(edges0)
 
     // Each round's rank frame is consumed exactly once (by the next
     // round's contribution join), so the rounds chain LAZILY into one
@@ -128,14 +119,12 @@ object Graph {
     * shares with C …) are exactly the high-diameter case label
     * propagation handles poorly. */
   def ringClusters(pairs: DataFrame): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(Graph)
     // Plain persist here (NOT checkpointRightsized): the CC rounds below
     // localCheckpoint per round anyway, so the static plan never compounds;
     // a checkpoint of p was measured WORSE (+1.5 s — it only added
     // materialization copies, q_ring_clusters 5.2→6.7 s profiled).
-    val p = pairs.select(col("user_a"), col("user_b"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastGraph = List(p)
+    val p = CacheRegistry.persist(Graph, pairs.select(col("user_a"), col("user_b")))
     val nodes = p.select(col("user_a").as("id"))
       .union(p.select(col("user_b").as("id"))).distinct()
     val edges = p.select(col("user_a").as("src"), col("user_b").as("dst"))
@@ -155,15 +144,13 @@ object Graph {
     // wedge enumeration below reads the oriented cache from four
     // consumers, and near-empty 32-partition caches of a ~20 k-edge graph
     // cost more task launches than compute).
-    releaseCache()
+    CacheRegistry.release(Graph)
     // checkpointRightsized (not a plain persist): the wedge/closure
     // consumers below reference these frames 4-6× and a persisted frame
     // still carries the full Rings lineage per reference — the static plan
     // measured 58 166 lines / 9 330 Exchange nodes at sf0.1 before
     // truncation, and AQE re-walked it per stage materialization.
-    val p = graft.util.Lineage.checkpointRightsized(
-      pairs.select(col("user_a"), col("user_b")))
-    lastGraph = List(p)
+    val p = CacheRegistry.checkpoint(Graph, pairs.select(col("user_a"), col("user_b")))
     val edges = p.select(col("user_a").as("src"), col("user_b").as("dst"))
       .union(p.select(col("user_b").as("src"), col("user_a").as("dst")))
     val deg = edges.groupBy(col("src").as("node"))
@@ -182,8 +169,7 @@ object Graph {
           .otherwise(struct(col("user_b").as("lo"), col("user_a").as("hi")))
           .as("e"))
       .select(col("e.lo").as("lo"), col("e.hi").as("hi"))
-    val orientedRs = graft.util.Lineage.checkpointRightsized(oriented)
-    lastOriented = Some(orientedRs)
+    val orientedRs = CacheRegistry.checkpoint(Graph, oriented)
 
     // Wedge at the low corner: (lo, hi1), (lo, hi2) with hi1 "before" hi2
     // in the orientation order; closed iff the oriented edge hi1→hi2 or

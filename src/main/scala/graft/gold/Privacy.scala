@@ -117,7 +117,6 @@ object Privacy {
     val cell = joined
       .groupBy("c_nationkey", "c_mktsegment", "o_orderpriority")
       .agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val global = cell.groupBy("o_orderpriority").agg(sum(col("n")).as("g"))
     val classes = cell.groupBy("c_nationkey", "c_mktsegment")
       .agg(sum(col("n")).as("group_size"))
@@ -131,7 +130,7 @@ object Privacy {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("c_nationkey", "c_mktsegment")
       .orderBy("o_orderpriority")
-    val result = grid
+    grid
       .withColumn("cp", sum(col("n")).over(w))
       .withColumn("cg", sum(col("g")).over(w))
       .crossJoin(broadcast(total))
@@ -150,8 +149,6 @@ object Privacy {
       .withColumn("meets_t", col("emd") <= t)
       .select("c_nationkey", "c_mktsegment", "group_size", "emd", "meets_t")
       .orderBy("c_nationkey", "c_mktsegment")
-    cell.unpersist(blocking = false)
-    result
   }
 
   /** DuckDB mirror of [[tCloseness]]. */

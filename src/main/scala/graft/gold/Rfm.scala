@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,26 +27,18 @@ import org.apache.spark.sql.functions._
   */
 object Rfm {
 
-  // The customer-grain base frame feeds the anchor, the quintile cuts,
-  // AND the scored output — persisted so the orders fact table scans
-  // exactly once per run (it is the only fact-sized input here).
-  @volatile private var lastBase: Option[DataFrame] = None
-  def releaseCache(): Unit = {
-    lastBase.foreach(_.unpersist(blocking = false))
-    lastBase = None
-  }
-
   def segments(orders: DataFrame): DataFrame = {
-    releaseCache()
-    val base = orders
+    // The customer-grain base frame feeds the anchor, the quintile cuts,
+    // AND the scored output — persisted so the orders fact table scans
+    // exactly once per run (it is the only fact-sized input here).
+    CacheRegistry.release(Rfm)
+    val base = CacheRegistry.persist(Rfm, orders
       .filter(col("o_custkey").isNotNull && col("o_totalprice") > 0)
       .groupBy(col("o_custkey").as("custkey"))
       .agg(
         max(col("o_orderdate").cast("date")).as("last_order"),
         count(lit(1)).as("frequency"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("monetary"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastBase = Some(base)
+        sum(col("o_totalprice").cast("decimal(18,2)")).cast("double").as("monetary")))
     val anchor = base.agg(max(col("last_order")).as("anchor_date"))
     val rfm = base.crossJoin(broadcast(anchor))
       .withColumn("recency_days", datediff(col("anchor_date"), col("last_order")).cast("long"))

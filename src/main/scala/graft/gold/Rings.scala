@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,20 +22,13 @@ import org.apache.spark.sql.functions._
   */
 object Rings {
 
-  // The admitted (post-governor) bucket membership feeds BOTH sides of
-  // the pair self-join; without a persist each side re-derives it from
-  // the events scan (2× scan + 2× distinct at 100 TB). Same
-  // cache-lifecycle contract as MinHash.lastBanded — a LIST because the
-  // incremental path holds a base and a delta store at once.
-  @volatile private var admittedCaches: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    admittedCaches.foreach(_.unpersist(blocking = false))
-    admittedCaches = Nil
-  }
-
   /** Admitted (day, device, user) bucket membership behind the occupancy
-    * governor; persisted (appends to the cache list — callers own the
-    * releaseCache() lifecycle). */
+    * governor, persisted under this object — callers own the
+    * `CacheRegistry.release(Rings)` lifecycle. The membership feeds BOTH
+    * sides of the pair self-join; without a persist each side re-derives
+    * it from the events scan (2× scan + 2× distinct at 100 TB). Several
+    * may be live at once: the incremental path holds a base and a delta
+    * store. */
   private def admittedBuckets(events: DataFrame, eventType: String,
                               maxUsersPerBucket: Int): DataFrame = {
     val buckets = events
@@ -52,10 +46,7 @@ object Rings {
       .agg(count(lit(1)).as("_occ"))
       .filter(col("_occ") >= 2 && col("_occ") <= maxUsersPerBucket)
       .select("day", "device")
-    val admitted = buckets.join(sized, Seq("day", "device"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { admittedCaches = admitted :: admittedCaches }
-    admitted
+    CacheRegistry.persist(Rings, buckets.join(sized, Seq("day", "device")))
   }
 
   /** Distinct user pairs (a < b) co-occurring on a device-day, with how
@@ -63,7 +54,7 @@ object Rings {
     * `deviceKey` is extracted from the events props JSON. */
   def sharedDevicePairs(events: DataFrame, eventType: String = "purchase",
                         maxUsersPerBucket: Int = 50): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(Rings)
     pairsFromStore(pairDeviceStore(events, eventType, maxUsersPerBucket,
       releaseFirst = false))
   }
@@ -79,7 +70,7 @@ object Rings {
   def pairDeviceStore(events: DataFrame, eventType: String = "purchase",
                       maxUsersPerBucket: Int = 50,
                       releaseFirst: Boolean = true): DataFrame = {
-    if (releaseFirst) releaseCache()
+    if (releaseFirst) CacheRegistry.release(Rings)
     val admitted = admittedBuckets(events, eventType, maxUsersPerBucket)
     val a = admitted.select(col("day"), col("device"), col("user_id").as("user_a"))
     val b = admitted.select(col("day"), col("device"), col("user_id").as("user_b"))
@@ -127,7 +118,7 @@ object Rings {
     */
   def adamicAdarPairs(events: DataFrame, eventType: String = "purchase",
                       maxUsersPerBucket: Int = 50): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(Rings)
     val admitted = admittedBuckets(events, eventType, maxUsersPerBucket)
     // Occupancy re-derived from admitted membership (exact — the
     // governor admitted whole buckets), carried onto each wedge row.

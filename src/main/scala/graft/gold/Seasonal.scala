@@ -1,5 +1,6 @@
 package graft.gold
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,24 +25,16 @@ import org.apache.spark.sql.functions._
   */
 object Seasonal {
 
-  // The calendar-grain hourly frame feeds both the baseline fit and the
-  // scored output — persisted so the events fact table scans once.
-  @volatile private var lastHourly: Option[DataFrame] = None
-  def releaseCache(): Unit = {
-    lastHourly.foreach(_.unpersist(blocking = false))
-    lastHourly = None
-  }
-
   def hourlyAnomalies(events: DataFrame,
                       lowRatio: Double = 0.5,
                       highRatio: Double = 2.0): DataFrame = {
-    releaseCache()
-    val hourly = events
+    // The calendar-grain hourly frame feeds both the baseline fit and the
+    // scored output — persisted so the events fact table scans once.
+    CacheRegistry.release(Seasonal)
+    val hourly = CacheRegistry.persist(Seasonal, events
       .filter(col("event_type") === "purchase")
       .groupBy(to_date(col("ts")).as("day"), hour(col("ts")).as("hr"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("dec_total"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastHourly = Some(hourly)
+      .agg(sum(col("value").cast("decimal(18,2)")).as("dec_total")))
 
     val baseline = hourly
       .withColumn("dow", dayofweek(col("day")))

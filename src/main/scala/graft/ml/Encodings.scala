@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -26,20 +27,7 @@ object Encodings {
   // exactly once per run instead of once per branch (the Rfm pattern).
   // The cached frames are category-grain (KBs), never data. ONE live
   // frame: building a second encoder releases the first's cache, so
-  // execute an encoder's result before building the next (Rfm semantics);
-  // release/replace is synchronized so concurrent builds cannot leak a
-  // persisted frame.
-  private var lastGrouped: Option[DataFrame] = None
-  private[graft] def releaseCache(): Unit = synchronized {
-    lastGrouped.foreach(_.unpersist(blocking = false))
-    lastGrouped = None
-  }
-  private def cacheGrouped(df: DataFrame): DataFrame = synchronized {
-    lastGrouped.foreach(_.unpersist(blocking = false))
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastGrouped = Some(p)
-    p
-  }
+  // execute an encoder's result before building the next (Rfm semantics).
 
   /** WOE/IV table for the given (featureName -> category column) pairs over
     * a binary `labelCol` (1 = event/bad). One pass: each row is exploded to
@@ -58,7 +46,8 @@ object Encodings {
         col(labelCol).cast("long").as("_label"))
       .select(col("fc.feature").as("feature"), col("fc.category").as("category"),
         col("_label"))
-    val byCat = cacheGrouped(stacked.groupBy("feature", "category")
+    CacheRegistry.release(Encodings)
+    val byCat = CacheRegistry.persist(Encodings, stacked.groupBy("feature", "category")
       .agg(count(lit(1)).as("n"), sum(col("_label")).as("n_bad"))
       .withColumn("n_good", col("n") - col("n_bad")))
     // per-feature totals reduce the already-grouped frame — no second
@@ -89,7 +78,8 @@ object Encodings {
     * The output is the lookup table: rows join it on (category, fold). */
   def targetEncodeOof(labeled: DataFrame, categoryCol: Column, labelCol: String,
                       foldCol: Column, m: Double = 10.0): DataFrame = {
-    val g = cacheGrouped(labeled
+    CacheRegistry.release(Encodings)
+    val g = CacheRegistry.persist(Encodings, labeled
       .select(categoryCol.cast("string").as("category"), foldCol.cast("long").as("fold"),
         col(labelCol).cast("long").as("_label"))
       .groupBy("category", "fold")

@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.operators.ScalableRank
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -443,7 +444,7 @@ object Evaluation {
     // multiplicatively in the plan; flat attachment keeps it linear, and
     // one side-tagged prefix pass serves both tables (midrankTables).
     val (encA, encB) = midrankTables(rows)
-    val ranked = ScalableRank.persistTracked(rows
+    val ranked = CacheRegistry.persist(ScalableRank, rows
       .join(encA, col("_sa") === col("_sv_a")).drop("_sv_a")
       .join(encB, col("_sb") === col("_sv_b")).drop("_sv_b"))
     // scalar frame: m, n, and the four rank-sum offsets

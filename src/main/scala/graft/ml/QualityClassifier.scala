@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Sampling
 import graft.text.QualityRules
+import graft.util.{CacheRegistry, Partitioning}
 
 /** Learned document-quality classifier, the fastText/CCNet shape every
   * production LLM-curation pipeline runs after the rule-based filters:
@@ -39,15 +40,6 @@ import graft.text.QualityRules
   */
 object QualityClassifier {
 
-  /** Previous call's featurized-split cache (released on the next call;
-    * the returned predictions are lazy — same contract as
-    * [[TrainedModel.assembleSplit]]). */
-  @volatile private var lastData: Option[DataFrame] = None
-  def releaseCache(): Unit = synchronized {
-    lastData.foreach(_.unpersist(blocking = false))
-    lastData = None
-  }
-
   /** Hashed unigram+bigram term-frequency features (the hashing trick):
     * no vocabulary, no fit, map-only. */
   def hashedFeatures(documents: DataFrame, dim: Int = 4096): DataFrame = {
@@ -67,19 +59,19 @@ object QualityClassifier {
 
   /** Train on the hash-stable 80/20 split against the Gopher weak label,
     * score EVERY document. Output grain: one row per doc —
-    * (doc_id, label, is_test, quality_score). */
+    * (doc_id, label, is_test, quality_score). The featurized split is
+    * held until the next call (the returned predictions are lazy — same
+    * contract as [[TrainedModel.assembleSplit]]). */
   def trainScore(documents: DataFrame, dim: Int = 4096): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(QualityClassifier)
     val labels = QualityRules.gopherQuality(documents)
       .select(col("doc_id"), col("passes_gopher").cast("double").as("label"))
-    val data = graft.util.Partitioning.rightsizeForIteration(
+    val data = Partitioning.persistForIteration(QualityClassifier,
       Sampling.hashSplit(
           hashedFeatures(documents, dim).join(labels, "doc_id"),
           col("doc_id"), trainBp = 8000, valBp = 0)
         .withColumn("is_test", col("split") === "test")
-        .select("doc_id", "fv", "label", "is_test")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    synchronized { lastData = Some(data) }
+        .select("doc_id", "fv", "label", "is_test"))
     val model = new LogisticRegression()
       .setFeaturesCol("fv").setLabelCol("label")
       .setMaxIter(100).setRegParam(1e-3).setStandardization(false)

@@ -1,5 +1,6 @@
 package graft.ml
 
+import graft.util.{CacheRegistry, Partitioning}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.DataFrame
@@ -31,33 +32,24 @@ object TrainedModel {
     "is_priority_order", "region_risk", "is_high_risk_region",
     "negative_balance", "account_balance")
 
-  /** Previous call's assembled-features cache (released on the next call —
-    * the returned predictions are lazy, so an in-call unpersist would drop
-    * the cache before the test split is ever scored). */
-  @volatile private var lastAssembled: Option[DataFrame] = None
-  def releaseCache(): Unit = synchronized {
-    lastAssembled.foreach(_.unpersist(blocking = false))
-    lastAssembled = None
-  }
-
   /** Assemble the 25 features into a vector column over the hash-stable
     * 80/20 split, persisted. Cache the assembled frame: every training
     * iteration is a full pass over the train split, and the test-split
     * scoring pass reuses the SAME materialization instead of recomputing
     * the whole feature-vector pipeline (windows + velocity union + joins)
-    * from the source scans. Shared by the LR and GBT paths. */
+    * from the source scans. Shared by the LR and GBT paths. The previous
+    * call's frame is released here, not at the end of a call: the returned
+    * predictions are lazy, so an in-call release would drop the cache
+    * before the test split is ever scored. */
   def assembleSplit(fullFeatures: DataFrame): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(TrainedModel)
     val data = FraudScore.withSplit(fullFeatures)
       .select(col("o_orderkey") +: col("label").cast("double").as("label") +:
         col("is_test") +: FeatureCols.map(c => col(c).cast("double").as(c)): _*)
-    val assembled = graft.util.Partitioning.rightsizeForIteration(
+    Partitioning.persistForIteration(TrainedModel,
       new VectorAssembler()
         .setInputCols(FeatureCols.toArray).setOutputCol("fv")
-        .transform(data)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    synchronized { lastAssembled = Some(assembled) }
-    assembled
+        .transform(data))
   }
 
   /** Train on the 80% split, score the 20% split. Returns per-row

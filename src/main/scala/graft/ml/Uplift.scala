@@ -1,6 +1,7 @@
 package graft.ml
 
 import graft.operators.ScalableRank
+import graft.util.{CacheRegistry, Partitioning}
 import org.apache.spark.ml.classification.LogisticRegression
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.DataFrame
@@ -29,17 +30,6 @@ import org.apache.spark.sql.functions._
   * everything after is a 10-row frame. */
 object Uplift {
 
-  @volatile private var caches: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    caches.foreach(_.unpersist(blocking = false))
-    caches = Nil
-  }
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { caches = p :: caches }
-    p
-  }
-
   private val FeatCols = Seq("n_click", "n_view", "n_signup", "n_error",
     "total_value")
 
@@ -63,17 +53,15 @@ object Uplift {
     * conversions, actual vs mean predicted uplift, and the cumulative
     * Qini value (incremental conversions over a volume-scaled control). */
   def upliftDeciles(events: DataFrame, deciles: Int = 10): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(Uplift)
     val users = userFrame(events)
-    val assembled0 = persisted(new VectorAssembler()
+    // two iterative LR fits read this frame ~20×: right-size partitions
+    // to the row count so each pass is not a fleet of near-empty tasks
+    val assembled = Partitioning.persistForIteration(Uplift, new VectorAssembler()
       .setInputCols(FeatCols.toArray).setOutputCol("fv")
       .transform(users.select(col("user_id") +: col("treated") +:
         col("converted").cast("double").as("label") +:
         FeatCols.map(c => col(c).cast("double").as(c)): _*)))
-    // two iterative LR fits read this frame ~20×: right-size partitions
-    // to the row count so each pass is not a fleet of near-empty tasks
-    val assembled = graft.util.Partitioning.rightsizeForIteration(assembled0)
-    if (assembled ne assembled0) synchronized { caches = assembled :: caches }
     val lr = new LogisticRegression()
       .setFeaturesCol("fv").setLabelCol("label")
       .setMaxIter(10).setRegParam(0.01).setStandardization(true)

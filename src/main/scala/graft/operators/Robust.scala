@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -25,29 +26,20 @@ import org.apache.spark.sql.functions._
   */
 object Robust {
 
-  // The two stats frames are group-cardinality-sized (KBs) but each
-  // derives from a FULL fact scan — persisting them caps the query at
-  // three fact scans (median pass, MAD pass, filter pass) instead of
-  // re-deriving the median scan under every consumer.
-  @volatile private var lastStats: List[DataFrame] = Nil
-  def releaseCache(): Unit = {
-    lastStats.foreach(_.unpersist(blocking = false))
-    lastStats = Nil
-  }
-
   def madOutliers(df: DataFrame, groupCols: Seq[String], valueCol: String,
                   k: Double = 3.0): DataFrame = {
-    releaseCache()
+    // The two stats frames are group-cardinality-sized (KBs) but each
+    // derives from a FULL fact scan — persisting them caps the query at
+    // three fact scans (median pass, MAD pass, filter pass) instead of
+    // re-deriving the median scan under every consumer.
+    CacheRegistry.release(Robust)
     val groups = groupCols.map(col)
-    val med = df.groupBy(groups: _*)
-      .agg(expr(s"percentile($valueCol, 0.5)").as("med"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val med = CacheRegistry.persist(Robust, df.groupBy(groups: _*)
+      .agg(expr(s"percentile($valueCol, 0.5)").as("med")))
     val deviated = df.join(broadcast(med), groupCols)
       .withColumn("abs_dev", abs(col(valueCol) - col("med")))
-    val mad = deviated.groupBy(groups: _*)
-      .agg(expr("percentile(abs_dev, 0.5)").as("mad"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastStats = List(med, mad)
+    val mad = CacheRegistry.persist(Robust, deviated.groupBy(groups: _*)
+      .agg(expr("percentile(abs_dev, 0.5)").as("mad")))
     deviated.join(broadcast(mad), groupCols)
       .withColumn("threshold", lit(k) * lit(1.4826) * col("mad"))
       .filter(col("abs_dev") > col("threshold"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -32,31 +33,18 @@ object ScalableRank {
   // expression (monotonically_increasing_id), which disables AQE exchange
   // reuse — every branch that references the ranked frame would recompute
   // it from the source scans. Persisting the ranged frame (and the rn
-  // output in `ranked`) makes each materialize exactly once; the registry
-  // bounds cache growth across calls in a long-lived session.
+  // output in `ranked`) makes each materialize exactly once. The frames
+  // are held under this object in CacheRegistry (callers whose decorated
+  // frame feeds several branches hold theirs here too — delongCompare's
+  // midrank frame, Behavior's per-user lags).
   //
-  // Contract: calls are expected to be sequential, and the DataFrame a
-  // call returns should be executed before the NEXT call — each call
-  // unpersists the previous call's caches, so a still-unexecuted earlier
+  // Contract: calls are expected to be sequential. Only `ranked` releases
+  // the previous calls' caches, so the DataFrame any call returns should
+  // be executed before the next `ranked` call — a still-unexecuted earlier
   // result stays correct (Spark recomputes the lineage) but silently
   // loses its cache; concurrent callers likewise thrash each other's
-  // caches without affecting correctness.
-  private val cached = scala.collection.mutable.ListBuffer.empty[DataFrame]
-  def releaseCache(): Unit = synchronized {
-    cached.foreach(_.unpersist(blocking = false))
-    cached.clear()
-  }
-  /** Track a caller-persisted frame in the same bounded release registry
-    * (for operators whose decorated frame feeds several branches —
-    * delongCompare's midrank frame is read by the scalar aggregate AND
-    * the component sums). */
-  private[graft] def persistTracked(df: DataFrame): DataFrame = persisted(df)
-
-  private def persisted(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cached += p
-    p
-  }
+  // caches without affecting correctness. The other calls' frames
+  // accumulate until then or until the sweep between queries.
 
   // Optimization-round note (r12, measured at sf0.1): persisting the
   // INPUT before the range exchange was tried and REVERTED — the range
@@ -70,7 +58,7 @@ object ScalableRank {
   /** Adds an exact global 1-based row number `out` under `order` (which
     * must be a total order — include a unique tiebreaker column). */
   def withGlobalRowNumber(df: DataFrame, order: Seq[Column], out: String): DataFrame = {
-    val ranged = persisted(df
+    val ranged = CacheRegistry.persist(ScalableRank, df
       .repartitionByRange(order: _*)
       .sortWithinPartitions(order: _*)
       .withColumn("_mid", monotonically_increasing_id())
@@ -111,7 +99,7 @@ object ScalableRank {
     require(df.columns.forall(!_.startsWith("_gps_")),
       "caller columns must not use the _gps_ internal prefix")
     val keys = group +: order
-    val ranged = persisted(df
+    val ranged = CacheRegistry.persist(ScalableRank, df
       .repartitionByRange(keys: _*)
       .sortWithinPartitions(keys: _*)
       .withColumn("_gps_mid", monotonically_increasing_id())
@@ -177,11 +165,11 @@ object ScalableRank {
   def ranked(df: DataFrame, value: Column, tiebreak: Column, ntiles: Int,
              rowCol: String = "rn", rankCol: String = "rank",
              denseCol: String = "dense_rank", ntileCol: String = "ntile"): DataFrame = {
-    releaseCache()
+    CacheRegistry.release(ScalableRank)
     val order = Seq(value.desc, tiebreak.asc)
     // rn feeds three branches (rank window, dense groups, final join) —
     // persist so the range+sort+index pipeline runs once.
-    val rn = persisted(withGlobalRowNumber(df, order, rowCol))
+    val rn = CacheRegistry.persist(ScalableRank, withGlobalRowNumber(df, order, rowCol))
     val wVal = Window.partitionBy(value)
     val ranked = rn.withColumn(rankCol, min(col(rowCol)).over(wVal))
     // dense_rank = index of the row's value among DISTINCT values in

@@ -1,5 +1,6 @@
 package graft.sim
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -46,11 +47,12 @@ object Bitext {
     val ys = tagged.filter(col("lang") === tgtLang)
       .select(col("vec_id").as("y_id"), col("embedding").as("yv"),
         col("nrm").as("y_nrm"))
-    val scored = xs.join(broadcast(ys))
+    // scored feeds both top-k directions; released on the next call
+    CacheRegistry.release(Bitext)
+    val scored = CacheRegistry.persist(Bitext, xs.join(broadcast(ys))
       .withColumn("cos_sim", expr("vec_dot(xv, yv)") / (col("x_nrm") * col("y_nrm")))
       .select(col("x_id"), col("y_id"), col("cos_sim"),
-        floor(col("cos_sim") * lit(1.0e9)).cast("long").as("cos_nano"))
-      .persist()
+        floor(col("cos_sim") * lit(1.0e9)).cast("long").as("cos_nano")))
 
     import graft.operators.ScalableRank.topKPerGroup
     val fwd = topKPerGroup(scored, Seq(col("x_id")),

@@ -292,6 +292,30 @@ object StreamOps {
         "existing store would overwrite earlier slices)")
   }
 
+  /** Shared foreachBatch scaffold for the store sinks: `write` gets every
+    * non-empty micro-batch with its batchId. */
+  private def storeSink(stream: DataFrame, checkpointDir: String)
+      (write: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) write(batch, batchId)
+      }
+      .start()
+
+  /** [[storeSink]] for the batchId-keyed slice stores: each micro-batch
+    * first claims the store's checkpoint lineage (claimStoreLineage). */
+  private def keyedStoreSink(stream: DataFrame, storePath: String,
+                             checkpointDir: String)
+      (write: (DataFrame, Long) => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    storeSink(stream, checkpointDir) { (batch, batchId) =>
+      claimStoreLineage(batch.sparkSession, storePath, checkpointDir)
+      write(batch, batchId)
+    }
+
   /** Streaming maintenance of the corpus-wide line-count store
     * ([[graft.text.LineDedup]]): each micro-batch's line counts are
     * APPENDED as a partial-count parquet batch — counts are additive, so
@@ -305,20 +329,13 @@ object StreamOps {
   def lineCountSink(stream: DataFrame, storePath: String,
                     checkpointDir: String, textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // foreachBatch is at-least-once: the batchId-KEYED overwrite makes
-        // a replayed micro-batch rewrite its own slice instead of
-        // double-counting lines (which would push once-seen lines over
-        // minDupCount and strip them from every document)
-        if (!batch.isEmpty) {
-          claimStoreLineage(batch.sparkSession, storePath, checkpointDir)
-          graft.text.LineDedup.writeLineBatch(batch, storePath, batchId, textCol)
-        }
-      }
-      .start()
+    // foreachBatch is at-least-once: the batchId-KEYED overwrite makes a
+    // replayed micro-batch rewrite its own slice instead of double-counting
+    // lines (which would push once-seen lines over minDupCount and strip
+    // them from every document)
+    keyedStoreSink(stream, storePath, checkpointDir) { (batch, batchId) =>
+      graft.text.LineDedup.writeLineBatch(batch, storePath, batchId, textCol)
+    }
 
   /** Streaming maintenance of the MinHash band store
     * ([[graft.text.MinHash]]): band rows are a PURE per-document function
@@ -334,20 +351,13 @@ object StreamOps {
   def bandStoreSink(stream: DataFrame, storePath: String,
                     checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // at-least-once replay safety: a re-delivered batch overwrites its
-        // own keyed slice — a plain re-append would duplicate band rows,
-        // inflate bucket occupancy past the governor, and silently drop
-        // healthy buckets from the pair join
-        if (!batch.isEmpty) {
-          claimStoreLineage(batch.sparkSession, storePath, checkpointDir)
-          graft.text.MinHash.writeBandBatch(batch, storePath, batchId)
-        }
-      }
-      .start()
+    // at-least-once replay safety: a re-delivered batch overwrites its own
+    // keyed slice — a plain re-append would duplicate band rows, inflate
+    // bucket occupancy past the governor, and silently drop healthy
+    // buckets from the pair join
+    keyedStoreSink(stream, storePath, checkpointDir) { (batch, batchId) =>
+      graft.text.MinHash.writeBandBatch(batch, storePath, batchId)
+    }
 
   /** Streaming maintenance of the winnowing fingerprint store
     * ([[graft.text.Winnow]]): selected fingerprints are a PURE
@@ -362,19 +372,12 @@ object StreamOps {
   def winnowStoreSink(stream: DataFrame, storePath: String,
                       checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // at-least-once replay safety: a re-delivered batch overwrites its
-        // own keyed slice — a re-append would duplicate fingerprint rows
-        // and inflate hash occupancy past the governor
-        if (!batch.isEmpty) {
-          claimStoreLineage(batch.sparkSession, storePath, checkpointDir)
-          graft.text.Winnow.writeFingerprintBatch(batch, storePath, batchId)
-        }
-      }
-      .start()
+    // at-least-once replay safety: a re-delivered batch overwrites its own
+    // keyed slice — a re-append would duplicate fingerprint rows and
+    // inflate hash occupancy past the governor
+    keyedStoreSink(stream, storePath, checkpointDir) { (batch, batchId) =>
+      graft.text.Winnow.writeFingerprintBatch(batch, storePath, batchId)
+    }
 
   /** Streaming maintenance of the (lang, word) token-count store
     * ([[graft.text.TokenCounts]]): each micro-batch appends one
@@ -388,16 +391,9 @@ object StreamOps {
   def tokenCountSink(stream: DataFrame, storePath: String,
                      checkpointDir: String, textCol: String = "text")
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          claimStoreLineage(batch.sparkSession, storePath, checkpointDir)
-          graft.text.TokenCounts.writeTokenBatch(batch, storePath, batchId, textCol)
-        }
-      }
-      .start()
+    keyedStoreSink(stream, storePath, checkpointDir) { (batch, batchId) =>
+      graft.text.TokenCounts.writeTokenBatch(batch, storePath, batchId, textCol)
+    }
 
   /** Streaming maintenance of the BM25 inverted-index store
     * ([[graft.text.Bm25]]): each micro-batch of new documents writes its
@@ -412,16 +408,9 @@ object StreamOps {
   def bm25IndexSink(stream: DataFrame, storePath: String,
                     checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          claimStoreLineage(batch.sparkSession, storePath, checkpointDir)
-          graft.text.Bm25.writeIndexBatch(batch, storePath, batchId)
-        }
-      }
-      .start()
+    keyedStoreSink(stream, storePath, checkpointDir) { (batch, batchId) =>
+      graft.text.Bm25.writeIndexBatch(batch, storePath, batchId)
+    }
 
   /** Streaming maintenance of the Bloom pre-dedup store
     * ([[graft.text.BloomDedup]]): each micro-batch's content hashes fold
@@ -441,15 +430,10 @@ object StreamOps {
                      mBits: Int = graft.text.BloomDedup.DefaultBits,
                      nHashes: Int = graft.text.BloomDedup.DefaultHashes)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.text.BloomDedup.appendHashBloom(batch, storePath, textCol,
-            mBits, nHashes)
-      }
-      .start()
+    storeSink(stream, checkpointDir) { (batch, _) =>
+      graft.text.BloomDedup.appendHashBloom(batch, storePath, textCol,
+        mBits, nHashes)
+    }
 
   /** Streaming maintenance of the novelty gram store
     * ([[graft.text.Novelty]]): each micro-batch's distinct 5-grams append
@@ -463,36 +447,17 @@ object StreamOps {
   def gramStoreSink(stream: DataFrame, storePath: String,
                     checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.text.Novelty.appendGramStore(batch, storePath)
-      }
-      .start()
+    storeSink(stream, checkpointDir) { (batch, _) =>
+      graft.text.Novelty.appendGramStore(batch, storePath)
+    }
 
   /** Stream-stream interval join: purchases enriched with any error by the
     * same user within the preceding hour. Watermarks on both sides + the
     * time-range predicate bound the join state — the Structured Streaming
     * shape of the reference's fraud-signal correlation.
     * (Inner interval join; at scale state size = 1 h of events per side.) */
-  def purchaseErrorJoin(events: DataFrame): DataFrame = {
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
-        col("event_id").as("p_event_id"), col("value").as("p_value"))
-      .withWatermark("p_ts", "2 hours")
-    val errors = events
-      .filter(col("event_type") === "error")
-      .select(col("ts").as("e_ts"), col("user_id").as("e_user"),
-        col("event_id").as("e_event_id"))
-      .withWatermark("e_ts", "2 hours")
-    purchases.join(errors,
-      col("p_user") === col("e_user") &&
-        col("e_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("e_ts") <= col("p_ts"))
-  }
+  def purchaseErrorJoin(events: DataFrame): DataFrame =
+    purchaseErrorIntervalJoin(events, "inner")
 
   /** LEFT OUTER stream-stream interval join: every purchase row emits —
     * matched rows as soon as the error arrives, UNMATCHED rows
@@ -502,23 +467,8 @@ object StreamOps {
     * stays bounded exactly as in the inner join — the watermark + the
     * time-range predicate let Spark evict both sides; the null-padded
     * emission is the eviction. */
-  def purchaseErrorLeftJoin(events: DataFrame): DataFrame = {
-    val purchases = events
-      .filter(col("event_type") === "purchase")
-      .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
-        col("event_id").as("p_event_id"), col("value").as("p_value"))
-      .withWatermark("p_ts", "2 hours")
-    val errors = events
-      .filter(col("event_type") === "error")
-      .select(col("ts").as("e_ts"), col("user_id").as("e_user"),
-        col("event_id").as("e_event_id"))
-      .withWatermark("e_ts", "2 hours")
-    purchases.join(errors,
-      col("p_user") === col("e_user") &&
-        col("e_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
-        col("e_ts") <= col("p_ts"),
-      "left_outer")
-  }
+  def purchaseErrorLeftJoin(events: DataFrame): DataFrame =
+    purchaseErrorIntervalJoin(events, "left_outer")
 
   /** FULL OUTER stream-stream interval join — the reconciliation shape
     * where EITHER side can be absent (the reference analog: refunds ↔
@@ -530,7 +480,12 @@ object StreamOps {
     * still arrive. State stays bounded exactly as in the inner/left
     * variants — the watermark + the time-range predicate let Spark evict
     * both sides, and the two null-padded emissions ARE the evictions. */
-  def purchaseErrorFullJoin(events: DataFrame): DataFrame = {
+  def purchaseErrorFullJoin(events: DataFrame): DataFrame =
+    purchaseErrorIntervalJoin(events, "full_outer")
+
+  /** The three purchase/error interval joins differ only in `joinType`. */
+  private def purchaseErrorIntervalJoin(events: DataFrame,
+                                        joinType: String): DataFrame = {
     val purchases = events
       .filter(col("event_type") === "purchase")
       .select(col("ts").as("p_ts"), col("user_id").as("p_user"),
@@ -545,6 +500,6 @@ object StreamOps {
       col("p_user") === col("e_user") &&
         col("e_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
         col("e_ts") <= col("p_ts"),
-      "full_outer")
+      joinType)
   }
 }

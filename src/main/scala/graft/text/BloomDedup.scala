@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -39,23 +40,6 @@ object BloomDedup {
     * 10^5 distinct hashes; size m_bits ≈ 10 × expected distinct hashes. */
   val DefaultBits: Int = 1 << 20
   val DefaultHashes: Int = 5
-
-  // The probed delta frame feeds three consumers (negatives, positives'
-  // two join sides) and the base-join frame feeds two (merged output +
-  // matched set) — without persists each re-derives the delta groupBy,
-  // the bitset fold, AND the base-summary subtree per consumer (~6 base
-  // scans at 100 TB; measured 13 s vs 0.6 s for the ungated dedup at
-  // sf0.1). Same cache-lifecycle contract as Rings/Basket.
-  @volatile private var caches: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    caches.foreach(_.unpersist(blocking = false))
-    caches = Nil
-  }
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { caches = p :: caches }
-    p
-  }
 
   private def bloomPos(h: Column, i: Int, mBits: Int): Column =
     pmod(xxhash64(h, lit(i)), lit(mBits.toLong)).cast("int")
@@ -196,8 +180,14 @@ object BloomDedup {
   def exactDupsIncremental(baseSummary: DataFrame, delta: DataFrame,
                            storePath: String,
                            textCol: String = "text"): DataFrame = {
-    releaseCache()
-    val probed = persisted(probedDeltaGroups(delta, storePath, textCol))
+    // The probed delta frame feeds three consumers (negatives, positives'
+    // two join sides) and the base-join frame feeds two (merged output +
+    // matched set) — without persists each re-derives the delta groupBy,
+    // the bitset fold, AND the base-summary subtree per consumer (~6 base
+    // scans at 100 TB; measured 13 s vs 0.6 s for the ungated dedup at
+    // sf0.1).
+    CacheRegistry.release(BloomDedup)
+    val probed = CacheRegistry.persist(BloomDedup, probedDeltaGroups(delta, storePath, textCol))
     val negatives = probed.filter(!col("might"))
     val positives = probed.filter(col("might"))
       .select(col("content_hash"), col("canonical_doc_id").as("d_can"),
@@ -205,7 +195,7 @@ object BloomDedup {
 
     // one base scan: merge matched positive groups in place, pass the
     // rest through untouched
-    val baseJoined = persisted(baseSummary
+    val baseJoined = CacheRegistry.persist(BloomDedup, baseSummary
       .select("content_hash", "canonical_doc_id", "doc_count")
       .join(broadcast(positives), Seq("content_hash"), "left"))
     val baseOut = baseJoined.select(

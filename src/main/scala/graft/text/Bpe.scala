@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.Lineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -72,7 +73,7 @@ object Bpe {
 
     if (words.count() <= driverRowBudget) {
       val local = words.collect()
-      words.unpersist(blocking = false)
+      Lineage.release(words)
       return trainMergesLocal(local, numMerges)
     }
 
@@ -101,10 +102,11 @@ object Bpe {
             .localCheckpoint()
           // The new checkpoint is materialized; release the superseded one
           // so a long merge schedule holds ONE vocab snapshot, not O(rounds).
-          prev.unpersist(blocking = false)
+          Lineage.release(prev)
         case _ => done = true
       }
     }
+    Lineage.release(words)
     merges.toSeq
   }
 

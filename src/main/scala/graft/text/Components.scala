@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.{CacheRegistry, Lineage}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -26,12 +27,14 @@ object Components {
     *
     * Throws if the fixpoint is not reached within `maxIter` rounds
     * (component diameter > maxIter) — a partial result would silently
-    * mislabel clusters; failing loud keeps the correctness contract. */
+    * mislabel clusters; failing loud keeps the correctness contract.
+    *
+    * The symmetrized edges and the final round stay checkpointed under
+    * this object until the sweep between queries frees them. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
                           maxIter: Int = 64): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
-      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
+    val sym = CacheRegistry.checkpoint(Components, edges.select(col("src"), col("dst"))
+      .unionByName(edges.select(col("dst").as("src"), col("src").as("dst"))))
     var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint()
     var prevSum = BigDecimal(-1)
     var iter = 0
@@ -51,9 +54,9 @@ object Components {
         col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
         .collect()(0).getDecimal(0)
       val sum = if (sumRaw == null) BigDecimal(0) else BigDecimal(sumRaw)
-      // next is materialized; release the superseded round's cache (the loop
-      // holds one label snapshot, not O(diameter)).
-      labels.unpersist(blocking = false)
+      // next is materialized; release the superseded round's checkpoint
+      // (the loop holds one label snapshot, not O(diameter)).
+      Lineage.release(labels)
       labels = next
       converged = sum == prevSum
       prevSum = sum
@@ -63,7 +66,8 @@ object Components {
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter rounds " +
           "(component diameter exceeds maxIter) — refusing to return partial labels")
-    labels.select(col("id"), col("label").as("cluster_id"))
+    CacheRegistry.adopt(Components, labels)
+      .select(col("id"), col("label").as("cluster_id"))
   }
 
   /** Connected components by alternating large-star / small-star rounds
@@ -98,6 +102,8 @@ object Components {
     *
     * Throws if not converged within `maxIter` rounds (loud-fail, same
     * contract as `connectedComponents`). Returns (labels, roundsUsed).
+    * The final round's edges stay checkpointed under this object until
+    * the sweep between queries frees them.
     */
   def connectedComponentsStarWithRounds(
       nodes: DataFrame, edges: DataFrame,
@@ -152,9 +158,9 @@ object Components {
       val fp = fingerprint(next)
       converged = fp == prev
       prev = fp
-      // next is materialized; drop the superseded round's cache so the loop
-      // holds one edge snapshot, not O(rounds).
-      e.unpersist(blocking = false)
+      // next is materialized; release the superseded round's checkpoint so
+      // the loop holds one edge snapshot, not O(rounds).
+      Lineage.release(e)
       e = next
       iter += 1
     }
@@ -164,6 +170,7 @@ object Components {
           "refusing to return partial labels")
     // Fixpoint edge set is a union of stars centered at component minima:
     // every node's label is min(self, min neighbor).
+    CacheRegistry.adopt(Components, e)
     val nbrMin = sym(e).groupBy(col("u").as("id")).agg(min(col("v")).as("nmin"))
     val labels = nodes.select(col("id"))
       .join(nbrMin, Seq("id"), "left")

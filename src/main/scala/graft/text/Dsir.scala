@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -34,14 +35,6 @@ object Dsir {
   private def bucketOf(token: Column): Column =
     conv(substring(md5(token), 1, 8), 16, 10).cast("long") % NumBuckets
 
-  // The ≤NumBuckets-row count frame feeds both the totals and the weight
-  // table — persisted so its corpus-scan lineage runs once.
-  @volatile private var lastCounts: Option[DataFrame] = None
-  def releaseCache(): Unit = {
-    lastCounts.foreach(_.unpersist(blocking = false))
-    lastCounts = None
-  }
-
   /** Per-document DSIR importance weight against a target slice.
     * `isTarget` selects the target sub-corpus (e.g. lang = 'en'). */
   def importanceWeights(documents: DataFrame, isTarget: Column): DataFrame = {
@@ -54,12 +47,12 @@ object Dsir {
     // Raw and target counts in ONE token-grain pass (count + conditional
     // count share the partial agg); totals fold from the ≤NumBuckets-row
     // count frame, so the corpus is scanned once for the whole model fit.
-    releaseCache()
-    val counts = tokens.groupBy("bucket").agg(
+    // The count frame feeds both the totals and the weight table —
+    // persisted so its corpus-scan lineage runs once.
+    CacheRegistry.release(Dsir)
+    val counts = CacheRegistry.persist(Dsir, tokens.groupBy("bucket").agg(
         count(lit(1)).as("cr"),
-        sum(when(col("is_target"), 1L).otherwise(0L)).as("ct"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastCounts = Some(counts)
+        sum(when(col("is_target"), 1L).otherwise(0L)).as("ct")))
     val totals = counts.agg(sum(col("cr")).as("tr"), sum(col("ct")).as("tt"))
 
     // Constant-size (≤ NumBuckets rows) weight table; absent-in-target

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -324,15 +325,15 @@ object MinHash {
   def detectorEval(documents: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.register(documents.sparkSession)
     // Detector side FIRST: nearDupPairsWithSizes releases this object's
-    // cache registry at its start, which would evict the sh persist below
+    // cached frames at its start, which would evict the sh persist below
     // if it ran after it.
     val detected = nearDupPairsWithSizes(documents)
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
     // The sorted-distinct shingle arrays are pure per-doc CPU (tokenize +
     // distinct + sort) recomputed by every consumer (the inverted truth
-    // index and both sides of the exact-verify join): persist once in the
-    // same bounded registry as the banded signatures.
-    val sh = persistBanded(documents.select(col("doc_id"), col("lang"),
+    // index and both sides of the exact-verify join): persist once, held
+    // as long as the banded signatures.
+    val sh = CacheRegistry.persist(MinHash, documents.select(col("doc_id"), col("lang"),
       array_sort(array_distinct(shingles(col("text")))).as("sh")))
     val inv = sh.select(col("doc_id"), col("lang"), explode(col("sh")).as("shingle"))
     val hot = inv.groupBy("shingle").agg(count(lit(1)).as("n"))
@@ -453,21 +454,6 @@ object MinHash {
     * dedup on the text hash, not by pairwise enumeration. */
   val DefaultMaxBucket = 1000
 
-  /** Unpersist the previous call's banded-signature caches (bounds cache
-    * growth when the library is embedded in a long-lived session). A list,
-    * not a single slot: one query can run BOTH pair generators (the
-    * ensemble), and a second call evicting the first's cache mid-query
-    * would silently re-pay the shingle+md5 subtree per consumer. */
-  @volatile private var lastBanded: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    lastBanded.foreach(_.unpersist(blocking = false))
-    lastBanded = Nil
-  }
-  private def persistBanded(df: DataFrame): DataFrame = synchronized {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastBanded = p :: lastBanded
-    p
-  }
 
   // ---- incremental band-store maintenance --------------------------------
   // The text-dedup analog of the ANN encoded store (sim/AnnIndex): minhash
@@ -535,8 +521,9 @@ object MinHash {
     * NOT a lazy builder: the bucket-size governor runs a Spark job at call
     * time (count per band bucket, doubling as the cache warm-up) and logs
     * any dropped hot buckets to stderr, before the caller executes the
-    * returned frame. Calls also follow the execute-before-next-call cache
-    * contract described on [[releaseCache]]. */
+    * returned frame. Each call releases the previous call's banded
+    * signatures (bounding cache growth in a long-lived session), so
+    * execute a result before the next call or it loses its cache. */
   def nearDupPairs(documents: DataFrame, maxBucket: Int = DefaultMaxBucket): DataFrame =
     nearDupPairsWithSizes(documents, maxBucket).drop("na", "nb")
 
@@ -548,8 +535,9 @@ object MinHash {
     // Banded signatures are cached: the self-join references the subtree
     // twice and the shingle+md5 computation is the dominant cost — the
     // cached table is only (doc_id, sigs[16], band cols) per band row.
-    releaseCache()
-    val bandedAll = persistBanded(bandsCarryingSigs(signaturesArr(documents)))
+    CacheRegistry.release(MinHash)
+    val bandedAll = CacheRegistry.persist(MinHash,
+      bandsCarryingSigs(signaturesArr(documents)))
     // Bucket-size governor: count members per band bucket, keep only
     // bounded buckets. The count also warms the cache, so the diagnostic
     // is not an extra pass over the expensive subtree.

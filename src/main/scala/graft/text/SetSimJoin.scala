@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -39,19 +40,6 @@ import org.apache.spark.sql.functions._
   */
 object SetSimJoin {
 
-  /** Previous call's rarest-first ordered-sets cache (released on the next
-    * call and by the central CacheRegistry sweep between queries). The
-    * ordered frame feeds FOUR consumers — both prefix sides of the
-    * candidate self-join and both verify-array joins — and its final
-    * aggregate (collect_list + struct sort per document) is the CPU-heavy
-    * part above the reused exchange, so uncached it runs once per
-    * consumer (guide §2.4/§5). */
-  @volatile private var lastOrdered: Option[DataFrame] = None
-  def releaseCache(): Unit = synchronized {
-    lastOrdered.foreach(_.unpersist(blocking = false))
-    lastOrdered = None
-  }
-
   /** Jaccard threshold t = ThrNum/ThrDen (rational so every filter stays
     * in integer arithmetic). 0.5 keeps the planted near-dup families of
     * the synthetic corpus and nothing else. */
@@ -71,15 +59,18 @@ object SetSimJoin {
     // order is free because array_sort on the struct pins it.
     val tok = base.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val dfreq = tok.groupBy("shingle").agg(count(lit(1)).as("df"))
-    releaseCache()
-    val ordered = tok.join(dfreq, "shingle")
+    // The rarest-first ordered sets feed FOUR consumers — both prefix
+    // sides of the candidate self-join and both verify-array joins — and
+    // their final aggregate (collect_list + struct sort per document) is
+    // the CPU-heavy part above the reused exchange, so uncached it runs
+    // once per consumer (guide §2.4/§5). Released on the next call.
+    CacheRegistry.release(SetSimJoin)
+    val ordered = CacheRegistry.persist(SetSimJoin, tok.join(dfreq, "shingle")
       .groupBy("doc_id")
       .agg(array_sort(collect_list(struct(col("df"), col("shingle")))).as("ord"))
       .select(col("doc_id"),
         expr("transform(ord, x -> x.shingle)").as("toks"),
-        size(col("ord")).cast("long").as("sz"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { lastOrdered = Some(ordered) }
+        size(col("ord")).cast("long").as("sz")))
 
     // Prefix length |d| − ⌈t|d|⌉ + 1 (integer ceil of t·sz).
     val ceilT = expr(s"(sz * $ThrNum + ${ThrDen - 1}) DIV $ThrDen")

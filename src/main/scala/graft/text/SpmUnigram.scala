@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.Lineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -110,7 +111,7 @@ object SpmUnigram {
         }
       table = prune(counts, chars.map(_._1), vocabSize)
     }
-    if (!useDriver) words.unpersist(blocking = false)
+    Lineage.release(words)
     table.toSeq
   }
 

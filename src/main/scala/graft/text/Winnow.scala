@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,21 +29,6 @@ import org.apache.spark.sql.functions._
   * never corpus².
   */
 object Winnow {
-
-  // candidatePairs reads the selected-fingerprint frame four times (hot
-  // set, governed cool set on both sides of the self-join) — without a
-  // persist each consumer re-runs the char-grain explode + selection
-  // window. Same cache-lifecycle contract as Basket.releaseCache.
-  @volatile private var caches: List[DataFrame] = Nil
-  def releaseCache(): Unit = synchronized {
-    caches.foreach(_.unpersist(blocking = false))
-    caches = Nil
-  }
-  private def persisted(df: DataFrame): DataFrame = {
-    val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    synchronized { caches = p :: caches }
-    p
-  }
 
   /** Gram length k: fingerprints detect shared substrings of length
     * ≥ GuaranteeLen = K + W − 1 = 11. */
@@ -131,8 +117,11 @@ object Winnow {
     * grams shared by half the corpus cannot explode the join. */
   def candidatePairs(docs: DataFrame, textCol: String = "text",
                      minShared: Int = 8, maxBucket: Int = 16): DataFrame = {
-    releaseCache()
-    val fp = persisted(fingerprints(docs, textCol)
+    // The selected-fingerprint frame is read four times (hot set, governed
+    // cool set on both sides of the self-join) — without a persist each
+    // consumer re-runs the char-grain explode + selection window.
+    CacheRegistry.release(Winnow)
+    val fp = CacheRegistry.persist(Winnow, fingerprints(docs, textCol)
       .select("doc_id", "fp_hash").distinct())
     val hot = fp.groupBy("fp_hash")
       .agg(count(lit(1)).as("_occ"))
@@ -195,8 +184,8 @@ object Winnow {
     // both sides of the pair self-join would otherwise re-run the store
     // scan + distinct shuffle three times (same reason candidatePairs
     // persists its fp frame).
-    releaseCache()
-    val store = persisted(
+    CacheRegistry.release(Winnow)
+    val store = CacheRegistry.persist(Winnow,
       spark.read.option("recursiveFileLookup", "true").parquet(path)
         .select("doc_id", "fp_hash").distinct())
     val hot = store.groupBy("fp_hash")

@@ -1,5 +1,6 @@
 package graft.text
 
+import graft.util.Lineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,7 +74,7 @@ object WordPiece {
 
     if (words.count() <= driverRowBudget) {
       val local = words.collect()
-      words.unpersist(blocking = false)
+      Lineage.release(words)
       return trainMergesLocal(local, numMerges)
     }
 
@@ -109,11 +110,11 @@ object WordPiece {
           words = words
             .map { case (sym, f) => (mergePair(sym, a, b), f) }
             .localCheckpoint()
-          prev.unpersist(blocking = false)
+          Lineage.release(prev)
         case None => done = true
       }
     }
-    words.unpersist(blocking = false)
+    Lineage.release(words)
     merges.toSeq
   }
 

@@ -1,6 +1,6 @@
 package graft.util
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Logical-plan truncation for multi-consumer frames inside ITERATIVE
@@ -34,7 +34,8 @@ object Lineage {
   /** Materialize `df` once, right-size its partition count to a
     * rows-per-partition floor (Partitioning.RowsPerPartition semantics),
     * and return a lineage-truncated (LogicalRDD-backed) frame. The caller
-    * must release it via [[release]] when the query is done. */
+    * must release it via [[release]] when the query is done (or make it
+    * through [[CacheRegistry.checkpoint]], which does). */
   def checkpointRightsized(
       df: DataFrame,
       rowsPerPartition: Long = Partitioning.RowsPerPartition): DataFrame = {
@@ -52,12 +53,12 @@ object Lineage {
 
   /** Unpersist the checkpointed RDD behind a [[checkpointRightsized]] (or
     * plain localCheckpoint) frame — `Dataset.unpersist` only sweeps
-    * cache-manager entries, not checkpoint RDDs, so operator release
-    * registries call this to keep the Bench/Verify inter-query
-    * isolation contract exact. No-op on non-checkpointed frames. */
-  def release(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    df.queryExecution.analyzed.foreach {
+    * cache-manager entries, not checkpoint RDDs, so [[CacheRegistry]] and
+    * iterative loops call this to free a checkpoint for real. It walks the
+    * whole analyzed plan: call it on checkpoint frames only. */
+  def release(ds: Dataset[_]): Unit = {
+    ds.unpersist(blocking = false)
+    ds.queryExecution.analyzed.foreach {
       case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
       case _ => ()
     }

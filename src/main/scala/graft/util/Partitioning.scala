@@ -1,7 +1,6 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
 /** Scale-adaptive partition right-sizing for persisted frames that feed
   * ITERATIVE consumers (L-BFGS / boosting / k-means fits: tens to hundreds
@@ -19,11 +18,11 @@ import org.apache.spark.storage.StorageLevel
   * sane partition count and this is a no-op; on small inputs it collapses
   * to a handful of partitions.
   *
-  * Contract: `df` must already be persisted (the count here doubles as
-  * its materialization). When coalescing applies, the coalesced layout is
-  * persisted and the original cache released — iterative consumers then
-  * read the small layout directly instead of re-merging per pass. The
-  * returned frame is the one the caller should register for release.
+  * The persist and its count are one materialization. When coalescing
+  * applies, the coalesced layout is persisted and the original cache
+  * released — iterative consumers then read the small layout directly
+  * instead of re-merging per pass. Both frames are held by `owner` in
+  * [[CacheRegistry]].
   * Coalesce is a narrow, deterministic merge of the materialized
   * partitions; row VALUES are unchanged (per-partition order is a merge
   * of the parent partitions in order). Learned-model consumers remain
@@ -36,19 +35,19 @@ object Partitioning {
     * parallelism for an in-memory pass. */
   val RowsPerPartition = 20000L
 
-  /** Returns a right-sized persisted replacement for an already-persisted
-    * `df` (possibly `df` itself). */
-  def rightsizeForIteration(df: DataFrame,
-                            rowsPerPartition: Long = RowsPerPartition): DataFrame = {
-    val n = df.count() // materializes the caller's persist
-    val cur = df.rdd.getNumPartitions
+  /** `df` persisted under `owner` with a right-sized partition count. */
+  def persistForIteration(owner: AnyRef, df: DataFrame,
+                          rowsPerPartition: Long = RowsPerPartition): DataFrame = {
+    val p = CacheRegistry.persist(owner, df)
+    val n = p.count()
+    val cur = p.rdd.getNumPartitions
     val want = math.max(1L, math.min(cur.toLong,
       (n + rowsPerPartition - 1) / rowsPerPartition)).toInt
-    if (want >= cur) df
+    if (want >= cur) p
     else {
-      val c = df.coalesce(want).persist(StorageLevel.MEMORY_AND_DISK)
+      val c = CacheRegistry.persist(owner, p.coalesce(want))
       c.count()
-      df.unpersist(blocking = false)
+      p.unpersist(blocking = false)
       c
     }
   }

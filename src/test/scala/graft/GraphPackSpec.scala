@@ -2,7 +2,8 @@ package graft
 
 import graft.gold.{Graph, Markov, Seasonal}
 import graft.operators.{EntityResolution, Robust, Sampling}
-import graft.text.Dsir
+import graft.text.{Components, Dsir}
+import graft.util.CacheRegistry
 import org.apache.spark.sql.functions._
 
 /** r8 graph / resolution / robust-stats pack: integer-exact PageRank,
@@ -79,6 +80,23 @@ class GraphPackSpec extends SparkSpec {
     assert(rc(1L)._3 && rc(8L)._3 && !rc(2L)._3)
   }
 
+  test("the sweep between queries frees every persist and checkpoint left live") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = pairsDf(1L -> 2L, 2L -> 3L, 8L -> 9L)
+    // ringClusters persists its pair list and runs star contraction;
+    // label propagation checkpoints its symmetrized edges and every round
+    val rings = Graph.ringClusters(pairs)
+    val cc = Components.connectedComponents(Seq(1L, 2L, 3L, 8L, 9L).toDF("id"),
+      pairs.select(col("user_a").as("src"), col("user_b").as("dst")))
+    assert(rings.count() === 5L && cc.count() === 5L)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.nonEmpty)
+    CacheRegistry.releaseAll(spark)
+    val left = sc.getPersistentRDDs.filter { case (id, _) => added(id) }
+    assert(left.isEmpty, s"still persisted after the sweep: ${left.values.mkString(", ")}")
+  }
+
   // ---- incremental pair store ----
 
   test("base+delta pair stores merge bit-identically to the full recompute") {
@@ -87,7 +105,7 @@ class GraphPackSpec extends SparkSpec {
     // real admitted pairs on the delta side
     val cut = ev.agg(date_sub(max(to_date(col("ts"))), 30).as("cut"))
     val tagged = ev.crossJoin(broadcast(cut))
-    graft.gold.Rings.releaseCache()
+    graft.util.CacheRegistry.release(graft.gold.Rings)
     val base = graft.gold.Rings.pairDeviceStore(
       tagged.filter(to_date(col("ts")) <= col("cut")), releaseFirst = false)
     val delta = graft.gold.Rings.pairDeviceStore(
@@ -115,7 +133,7 @@ class GraphPackSpec extends SparkSpec {
       .withColumn("event_type", lit("purchase"))
     val out = graft.gold.Rings.adamicAdarPairs(ev)
       .orderBy("user_a", "user_b").collect()
-    graft.gold.Rings.releaseCache()
+    graft.util.CacheRegistry.release(graft.gold.Rings)
     def q(occ: Double): Long =
       math.floor((1.0 / math.log(occ)).toFloat.toDouble * 1e6).toLong
     val p12 = out.find(r => r.getLong(0) == 1L && r.getLong(1) == 2L).get

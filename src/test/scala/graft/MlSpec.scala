@@ -212,7 +212,7 @@ class MlSpec extends SparkSpec {
     // trick + L-BFGS over the same partitioning)
     val second = QualityClassifier.trainScore(docs).orderBy("doc_id").collect().toSeq
     assert(first == second, "retrain diverged")
-    QualityClassifier.releaseCache()
+    graft.util.CacheRegistry.release(QualityClassifier)
   }
 
   // ---- isotonic calibration ----

@@ -637,7 +637,7 @@ class StreamingSpec extends SparkSpec {
     } finally {
       q.stop()
       feats.unpersist(blocking = false)
-      TrainedModel.releaseCache()
+      graft.util.CacheRegistry.release(TrainedModel)
     }
   }
 
@@ -1085,7 +1085,7 @@ class StreamingSpec extends SparkSpec {
       endpoint.stop()
       graft.streaming.Observability.detach(spark, listener)
       feats.unpersist(blocking = false)
-      graft.ml.TrainedModel.releaseCache()
+      graft.util.CacheRegistry.release(graft.ml.TrainedModel)
     }
   }
 
