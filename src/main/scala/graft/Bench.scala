@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every registered query at the SF given by
   * SPARK_GRAFT_SF_DIR and prints one JSON line. Queries run in name order
@@ -11,15 +10,7 @@ object Bench {
     val loadStart = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession()
     // warm up: JVM, codegen (agg/window/sort paths), parquet footer reads
     spark.range(1000000L).selectExpr("sum(id)").collect()
     spark.range(10000L).selectExpr("id % 7 AS k", "CAST(id AS DOUBLE) AS v")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit CLI: prints the formatted physical plan of named queries
   * (all queries when none named) at a given SF dir — the per-operator
   * "is this the plan I'd want at 100 TB" check (pushed filters, broadcast
@@ -13,15 +11,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = args.drop(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = CliSession(logLevel = "ERROR")
     val targets: Seq[String] =
       if (names.nonEmpty) names.toSeq else SparkEntry.queries.keys.toSeq.sorted
     targets.foreach { name =>

@@ -130,14 +130,14 @@ private[graft] object QueriesClustering {
       Some(graft.multimodal.ImageHash.imageClustersOracleSql())),
 
     // Corpus cluster map / topic-mixture audit: seeded coarse KMeans
-    // (bounded-sample fit shared with q_knn_ivf via the cacheKey memo),
+    // (bounded-sample fit shared with q_knn_ivf through util.FitMemo),
     // one map-only assignment pass, cell-grain profile of <= nlist rows.
     // Rows-only: learned centroids are engine-local (same class as the
     // ANN pack); ClusteringSpec binds assignment-is-argmin and
     // partition-of-the-corpus.
     QueryDef("q_kmeans_clusters",
       (s, d) => graft.sim.Clustering.profile(
-        Tables.embeddings(s, d), nlist = 16, cacheKey = Some(d)),
+        Tables.embeddings(s, d), nlist = 16),
       None),
 
     // Embedding-distribution drift: PSI/chi2/binned-KS over kmeans-cell
@@ -148,7 +148,7 @@ private[graft] object QueriesClustering {
     QueryDef("q_embed_drift",
       (s, d) => graft.sim.Clustering.embedDrift(
         Tables.embeddings(s, d), nlist = 16,
-        inA = col("vec_id") % 2 === 0, cacheKey = Some(d)),
+        inA = col("vec_id") % 2 === 0),
       None),
 
     // Cluster-balanced diversity sample: each cell contributes its
@@ -158,7 +158,7 @@ private[graft] object QueriesClustering {
     // rerun/repartition determinism.
     QueryDef("q_sample_balanced",
       (s, d) => graft.sim.Clustering.balancedSample(
-          Tables.embeddings(s, d), nlist = 16, quota = 25, cacheKey = Some(d))
+          Tables.embeddings(s, d), nlist = 16, quota = 25)
         .orderBy("cell", "samp_rank"),
       None),
 
@@ -170,7 +170,7 @@ private[graft] object QueriesClustering {
     QueryDef("q_cluster_labels",
       (s, d) => graft.sim.Clustering.clusterLabels(
           Tables.documents(s, d), Tables.embeddings(s, d),
-          nlist = 16, k = 5, cacheKey = Some(d))
+          nlist = 16, k = 5)
         .orderBy("cell", "label_rank"),
       None),
 

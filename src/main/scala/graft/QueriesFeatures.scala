@@ -987,12 +987,12 @@ private[graft] object QueriesFeatures {
             Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d)),
           clean,
           Cleaning.cleanLineitem(Tables.lineitem(s, d)))
-        // shared seeded fit: q_model_importance reads the SAME trees, so
-        // the two queries cost one training pass total per run. Bench
-        // caveat: whichever of the two runs first absorbs the training
-        // cost — only their SUM is comparable across rounds.
+        // shared seeded fit: q_model_importance's identical feature frame
+        // gets the SAME trees from util.FitMemo — one training pass per
+        // run. Bench caveat: whichever of the two runs first absorbs the
+        // training cost — only their SUM is comparable across rounds.
         GbtModel.reloadEval(feats, root, maxIter = 5,
-          pretrained = Some(GbtModel.fittedShared(feats, d, maxIter = 5)))
+          pretrained = Some(GbtModel.fittedShared(feats, maxIter = 5)))
       },
       None),
 
@@ -1007,10 +1007,10 @@ private[graft] object QueriesFeatures {
             Tables.customer(s, d), Tables.nation(s, d), Tables.region(s, d)),
           clean,
           Cleaning.cleanLineitem(Tables.lineitem(s, d)))
-        // importances come off the shared fit (trained once per run,
-        // reused by q_model_reload_eval) — zero extra training passes
+        // importances come off the fit shared with q_model_reload_eval
+        // (util.FitMemo) — zero extra training passes
         GbtModel.featureImportance(feats, maxIter = 5,
-          pretrained = Some(GbtModel.fittedShared(feats, d, maxIter = 5)))
+          pretrained = Some(GbtModel.fittedShared(feats, maxIter = 5)))
       },
       None),
 

@@ -870,8 +870,7 @@ private[graft] object QueriesTextSim {
     // (learned cells, ANN class); EvalDriftSpec recovers planted
     // mislabels on a known geometry through this exact path.
     QueryDef("q_label_noise_ann",
-      (s, d) => graft.ml.LabelNoise.screenAnn(
-          Tables.embeddings(s, d), cacheKey = Some(d))
+      (s, d) => graft.ml.LabelNoise.screenAnn(Tables.embeddings(s, d))
         .orderBy("vec_id"),
       None),
 
@@ -917,21 +916,21 @@ private[graft] object QueriesTextSim {
     // aren't cross-engine reproducible → rows-only; FunctionsSpec asserts
     // recall@k dominates the data-oblivious sign-LSH bucket path.
     QueryDef("q_knn_ivf",
-      (s, d) => Similarity.knnIvf(Tables.embeddings(s, d), cacheKey = Some(d))
+      (s, d) => Similarity.knnIvf(Tables.embeddings(s, d))
         .orderBy("query_id", "rank"),
       None),
 
     // Product-quantized ADC scan + exact re-rank (rows-only: seeded
     // KMeans codebooks are engine-local; FunctionsSpec bounds recall).
     QueryDef("q_knn_pq",
-      (s, d) => Similarity.knnPq(Tables.embeddings(s, d), cacheKey = Some(d))
+      (s, d) => Similarity.knnPq(Tables.embeddings(s, d))
         .orderBy("query_id", "rank"),
       None),
 
     // IVF-PQ composition (coarse cells gate candidates, PQ codes rank
     // them, floats only for the re-rank shortlist) — rows-only.
     QueryDef("q_knn_ivfpq",
-      (s, d) => Similarity.knnIvfPq(Tables.embeddings(s, d), cacheKey = Some(d))
+      (s, d) => Similarity.knnIvfPq(Tables.embeddings(s, d))
         .orderBy("query_id", "rank"),
       None),
 
@@ -950,8 +949,7 @@ private[graft] object QueriesTextSim {
     // FunctionsSpec binds orthonormality, explained-variance ordering,
     // energy-capture floor, and refit determinism.
     QueryDef("q_embed_pca",
-      (s, d) => sim.Pca.embedPca(Tables.embeddings(s, d), k = 8,
-          cacheKey = Some(s"$d#pca"))
+      (s, d) => sim.Pca.embedPca(Tables.embeddings(s, d), k = 8)
         // Harness surface: the raw array<float> projection crashes the
         // driver's pandas sort (unhashable ndarray) — emit a deterministic
         // string digest of pv instead; FunctionsSpec binds the raw arrays.
@@ -965,8 +963,7 @@ private[graft] object QueriesTextSim {
     // ANN via PCA-space prefilter + exact full-dim re-rank ("PCAR,Flat").
     // Rows-only: learned subspace; FunctionsSpec binds recall vs brute.
     QueryDef("q_knn_pca",
-      (s, d) => sim.Pca.knnPca(Tables.embeddings(s, d),
-          cacheKey = Some(s"$d#pca"))
+      (s, d) => sim.Pca.knnPca(Tables.embeddings(s, d))
         .orderBy("query_id", "rank"),
       None),
 
@@ -979,8 +976,7 @@ private[graft] object QueriesTextSim {
     QueryDef("q_knn_reload",
       (s, d) => {
         val root = graft.util.Scratch.dir("graft-ann-registry")
-        graft.sim.AnnIndex.reloadParity(Tables.embeddings(s, d), root,
-            cacheKey = Some(d))
+        graft.sim.AnnIndex.reloadParity(Tables.embeddings(s, d), root)
           .orderBy("query_id", "rank")
       },
       None),
@@ -1000,7 +996,7 @@ private[graft] object QueriesTextSim {
         val emb = Tables.embeddings(s, d)
         val base = emb.filter(col("vec_id") % 4 =!= 3)
         val delta = emb.filter(col("vec_id") % 4 === 3)
-        val idx = graft.sim.AnnIndex.train(base, cacheKey = Some(s"$d#incr-base"))
+        val idx = graft.sim.AnnIndex.train(base)
         graft.sim.AnnIndex.buildEncoded(base, idx, s"$store/corpus")
         graft.sim.AnnIndex.appendEncoded(delta, idx, s"$store/corpus")
         graft.sim.AnnIndex.searchEncoded(s, s"$store/corpus", idx)
@@ -1012,8 +1008,7 @@ private[graft] object QueriesTextSim {
     // Mean recall of EVERY ANN method incl. the learned ones (rows-only:
     // contains IVF/PQ; the brute row is the 1.0 sanity anchor).
     QueryDef("q_knn_recall_all",
-      (s, d) => Similarity.knnRecallSummary(Tables.embeddings(s, d),
-          cacheKey = Some(d))
+      (s, d) => Similarity.knnRecallSummary(Tables.embeddings(s, d))
         .orderBy("method"),
       None),
 
@@ -1098,8 +1093,7 @@ private[graft] object QueriesTextSim {
     // learned cells are engine-local; FunctionsSpec proves precision exact
     // and floors recall against the all-pairs rule)
     QueryDef("q_semantic_dedup",
-      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), 16, 0.35,
-          cacheKey = Some(d))
+      (s, d) => Similarity.semanticDedup(Tables.embeddings(s, d), 16, 0.35)
         .orderBy("vec_id"),
       None),
 

@@ -46,32 +46,19 @@ object GbtModel {
       when(col("label") === 1.0, lit(spw)).otherwise(lit(1.0)))
   }
 
-  /** One fit per (dataset, maxIter) per process: q_model_reload_eval and
-    * q_model_importance train the IDENTICAL estimator (same seed, params,
-    * hash-stable split), so fitting twice would produce the same trees
-    * twice and burn a full training pass. The memo holds the fitted
-    * driver-side model (KBs of tree structure), never data.
-    *
-    * Staleness assumption: the key is the dataset PATH — if data under the
-    * same path is regenerated within one JVM, the memo serves the model of
-    * the OLD data. Bench/Verify are single-run processes so this cannot
-    * bite there; suites that rewrite a temp dir must call
-    * [[clearSharedFits]] between generations. Bench-timing corollary:
-    * whichever sharing query runs first absorbs the training cost and the
-    * other reports near-zero, so only the SUM of the sharing queries is
-    * comparable across rounds (per-query splits are order-dependent). */
-  private val sharedFit =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), GBTClassificationModel]
-  def fittedShared(fullFeatures: DataFrame, cacheKey: String,
-                   maxIter: Int): GBTClassificationModel =
-    sharedFit.getOrElseUpdate((cacheKey, maxIter), {
+  /** One fit per (feature frame, maxIter) per process: q_model_reload_eval
+    * and q_model_importance train the IDENTICAL estimator (same seed,
+    * params, hash-stable split), so fitting twice would produce the same
+    * trees twice and burn a full training pass. Memoized through
+    * util.FitMemo, keyed by the frame's canonical plan and input files:
+    * the two queries' separately built feature frames share one fit, and
+    * data rewritten under the same paths refits. The memo holds the
+    * fitted driver-side model (KBs of tree structure), never data. */
+  def fittedShared(fullFeatures: DataFrame, maxIter: Int): GBTClassificationModel =
+    graft.util.FitMemo("gbt", fullFeatures, maxIter) {
       val assembled = TrainedModel.assembleSplit(fullFeatures)
       baseEstimator(maxIter).fit(withClassWeight(assembled.filter(!col("is_test"))))
-    })
-
-  /** Drop every memoized fit (tests that regenerate data under a reused
-    * path call this between generations). */
-  private[graft] def clearSharedFits(): Unit = sharedFit.clear()
+    }
 
   /** Fit one production CANDIDATE on the 80% split — the train stage of
     * the retrain DAG (ref airflow/dags/ml_training_dag.py train_model).
@@ -190,16 +177,21 @@ object GbtModel {
           }
         }
       }
-      val perFold = futures.map(_.map(Await.result(_, Duration.Inf)))
-      folds.foreach { case (a, b) =>
-        a.unpersist(blocking = false); b.unpersist(blocking = false)
-      }
+      // every fit settles before the folds are freed (a fit still running
+      // would re-cache its fold); a failed fit is then rethrown
+      futures.foreach(_.foreach(Await.ready(_, Duration.Inf)))
+      val perFold = futures.map(_.map(_.value.get.get))
       // mean in FOLD ORDER per grid point, then CrossValidator's
       // first-max argmax (maxBy keeps the earliest index on ties)
       val avg = perFold.transpose.map(_.sum / numFolds)
       val (bestMetric, bestIdx) = avg.zipWithIndex.maxBy(_._1)
       (bestIdx, bestMetric)
-    } finally pool.shutdown()
+    } finally {
+      pool.shutdown()
+      folds.foreach { case (a, b) =>
+        a.unpersist(blocking = false); b.unpersist(blocking = false)
+      }
+    }
   }
 
   /** Train → save to the registry → reload "latest" → score held-out with

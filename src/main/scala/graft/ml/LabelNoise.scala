@@ -49,10 +49,9 @@ object LabelNoise {
     * rows-only (the ANN class); EvalDriftSpec binds planted-mislabel
     * recovery on a known geometry. */
   def screenAnn(embeddings: DataFrame, numQueries: Int = 100, k: Int = 10,
-                suspectFrac: Double = 0.8, nlist: Int = 16, nprobe: Int = 4,
-                cacheKey: Option[String] = None): DataFrame =
-    rollup(graft.sim.Similarity.knnIvf(
-        embeddings, numQueries, k, nlist, nprobe, cacheKey),
+                suspectFrac: Double = 0.8, nlist: Int = 16,
+                nprobe: Int = 4): DataFrame =
+    rollup(graft.sim.Similarity.knnIvf(embeddings, numQueries, k, nlist, nprobe),
       embeddings, numQueries, suspectFrac)
 
   /** DuckDB mirror: the shared brute-ranking CTE

@@ -133,6 +133,11 @@ case class AsOfJoinExec(
   override def inputRDDs(): Seq[RDD[InternalRow]] =
     left.execute() :: right.execute() :: Nil
 
+  // both children are read through inputRDDs and never produce() into this
+  // stage, so the probe loop below is the stage's only row producer — the
+  // place a parent LIMIT's stop condition belongs (as in a leaf scan)
+  override protected def canCheckLimitNotReached: Boolean = true
+
   // values extracted from the (reused) right-side row buffer must outlive
   // the next rightInput.next() call: primitives copy by value, strings clone
   private def copyOut(dt: DataType, v: String): String = dt match {

@@ -26,26 +26,25 @@ case class IvfPqIndex(
 }
 
 object AnnIndex {
-  import Similarity.{withNormalized, trainCoarseKeyed, trainCodebooksKeyed,
+  import Similarity.{withNormalized, trainCoarse, trainCodebooks,
     encodeCodes, adcRerank, d2}
 
   /** Fit both quantizers on the bounded deterministic sample and
     * materialize them as plain float arrays (engine-portable — no Spark-ML
-    * model object survives into the index). With a `cacheKey` the seeded
-    * fits come from the process-wide shared memo (Similarity
-    * .trainCoarseKeyed/.trainCodebooksKeyed), so building an index after
-    * any keyed ANN query costs zero extra KMeans fits. */
+    * model object survives into the index). The seeded fits come from
+    * util.FitMemo (Similarity.trainCoarse/.trainCodebooks), so building an
+    * index over a corpus any ANN query already fitted costs zero extra
+    * KMeans fits. */
   def train(embeddings: DataFrame, nlist: Int = 16, subspaces: Int = 8,
-            codebookSize: Int = 16,
-            cacheKey: Option[String] = None): IvfPqIndex = {
+            codebookSize: Int = 16): IvfPqIndex = {
     val base = withNormalized(embeddings)
     val dim = base.select(size(col("embedding"))).head().getInt(0)
     require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
-    val coarse = trainCoarseKeyed(base, nlist, cacheKey)
+    val coarse = trainCoarse(base, nlist)
     val centroids = coarse.clusterCenters.toIndexedSeq
       .map(_.toArray.toSeq.map(_.toFloat))
-    val codebooks = trainCodebooksKeyed(base, subspaces, dim / subspaces,
-      codebookSize, cacheKey)
+    val codebooks = trainCodebooks(base, subspaces, dim / subspaces,
+      codebookSize)
     IvfPqIndex(nlist, subspaces, codebookSize, dim, centroids, codebooks)
   }
 
@@ -241,10 +240,9 @@ object AnnIndex {
     * neighbor or a non-bit-identical score — must be 0, or the registry
     * round trip corrupted the codebooks. Rows-only for the oracle
     * (seeded KMeans is engine-local); AnnIndexSpec asserts the zero. */
-  def reloadParity(embeddings: DataFrame, root: String,
-                   cacheKey: Option[String] = None): DataFrame = {
+  def reloadParity(embeddings: DataFrame, root: String): DataFrame = {
     val spark = embeddings.sparkSession
-    val live = train(embeddings, cacheKey = cacheKey)
+    val live = train(embeddings)
     val version = save(spark, live, root, "ivfpq")
     val reloaded = load(spark, root, "ivfpq")
     val liveRes = search(embeddings, live)

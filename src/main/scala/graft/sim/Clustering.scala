@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * this extends the LLM-pipeline axis the same way the ANN pack does.)
   *
   * One seeded coarse KMeans (fit on the bounded hash-uniform sample via
-  * Similarity.trainCoarseKeyed — never the corpus) partitions the
-  * normalized embedding space into `nlist` cells, shared with the IVF
-  * index when the cacheKey matches (same memo, zero extra fits). On top:
+  * Similarity.trainCoarse — never the corpus) partitions the normalized
+  * embedding space into `nlist` cells. The fit is memoized by
+  * util.FitMemo, so the IVF index over the same corpus shares it (zero
+  * extra fits). On top:
   *
   *   - `profile` — per-cluster size, dispersion (mean/max squared L2 to
   *     the centroid on the unit sphere) and label mass: the topic-mixture
@@ -39,12 +40,11 @@ object Clustering {
   /** The fitted centroids as (cell, centroid) rows — nlist literal-sized
     * rows; exposed so ClusteringSpec can verify assignment-is-argmin
     * against ALL cells, not just the chosen one. */
-  def centroids(embeddings: DataFrame, nlist: Int,
-                cacheKey: Option[String] = None): DataFrame = {
+  def centroids(embeddings: DataFrame, nlist: Int): DataFrame = {
     val spark = embeddings.sparkSession
     import spark.implicits._
     val base = Similarity.withNormalized(embeddings)
-    Similarity.trainCoarseKeyed(base, nlist, cacheKey)
+    Similarity.trainCoarse(base, nlist)
       .clusterCenters.zipWithIndex.map { case (c, i) =>
         (i.toLong, c.toArray.toSeq)
       }.toSeq.toDF("c_cell", "centroid")
@@ -53,13 +53,12 @@ object Clustering {
   /** Per-row cell assignment: (vec_id, label, cell, dist2) where dist2 is
     * squared L2 from the L2-normalized vector to its cell centroid (the
     * dispersion measure `profile` aggregates). One corpus pass. */
-  def assignments(embeddings: DataFrame, nlist: Int,
-                  cacheKey: Option[String] = None): DataFrame = {
+  def assignments(embeddings: DataFrame, nlist: Int): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
     val spark = embeddings.sparkSession
     import spark.implicits._
     val base = Similarity.withNormalized(embeddings)
-    val model = Similarity.trainCoarseKeyed(base, nlist, cacheKey)
+    val model = Similarity.trainCoarse(base, nlist)
     // centroids: nlist rows of dim doubles — literal-sized, broadcast
     val cells = model.clusterCenters.zipWithIndex.map { case (c, i) =>
       (i.toLong, c.toArray.toSeq)
@@ -74,9 +73,8 @@ object Clustering {
 
   /** Topic-mixture audit: per-cluster size, dispersion, and positive-label
     * mass, one row per non-empty cell (≤ nlist rows total). */
-  def profile(embeddings: DataFrame, nlist: Int,
-              cacheKey: Option[String] = None): DataFrame =
-    assignments(embeddings, nlist, cacheKey)
+  def profile(embeddings: DataFrame, nlist: Int): DataFrame =
+    assignments(embeddings, nlist)
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n"),
         avg(col("dist2")).as("mean_dist2"),
@@ -94,10 +92,9 @@ object Clustering {
     * reference-slice predicate over the assignment columns
     * (vec_id/label/cell); period B = ¬A. Cost: the assignment pass plus
     * a ≤ nlist-row drift rollup. */
-  def embedDrift(embeddings: DataFrame, nlist: Int, inA: Column,
-                 cacheKey: Option[String] = None): DataFrame =
+  def embedDrift(embeddings: DataFrame, nlist: Int, inA: Column): DataFrame =
     graft.gold.Drift.binnedDrift(
-      assignments(embeddings, nlist, cacheKey),
+      assignments(embeddings, nlist),
       col("cell"), col("cell"), inA, nlist)
 
   /** Cluster-balanced diversity sample: each cell contributes its
@@ -105,10 +102,9 @@ object Clustering {
     * within the cell, deterministic across runs and repartitions (priority
     * is a pure function of vec_id; ties cannot occur since vec_id is the
     * final tiebreak). Output: (cell, samp_rank, vec_id, label). */
-  def balancedSample(embeddings: DataFrame, nlist: Int, quota: Int,
-                     cacheKey: Option[String] = None): DataFrame =
+  def balancedSample(embeddings: DataFrame, nlist: Int, quota: Int): DataFrame =
     graft.operators.ScalableRank.topKPerGroup(
-        assignments(embeddings, nlist, cacheKey)
+        assignments(embeddings, nlist)
           .withColumn("pri", xxhash64(col("vec_id"))),
         Seq(col("cell")), Seq(col("pri").asc, col("vec_id").asc),
         quota, "samp_rank")
@@ -152,9 +148,8 @@ object Clustering {
     * ClusteringSpec binds the formula, determinism, and that every label
     * actually occurs in its cell. */
   def clusterLabels(documents: DataFrame, embeddings: DataFrame,
-                    nlist: Int, k: Int = 5,
-                    cacheKey: Option[String] = None): DataFrame = {
-    val cells = assignments(embeddings, nlist, cacheKey)
+                    nlist: Int, k: Int = 5): DataFrame = {
+    val cells = assignments(embeddings, nlist)
       .select(col("vec_id"), col("cell"))
     val counts = documents
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))

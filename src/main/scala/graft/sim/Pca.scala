@@ -33,37 +33,29 @@ object Pca {
                             components: IndexedSeq[IndexedSeq[Double]],
                             explained: IndexedSeq[Double])
 
-  // One fit per (dataset key, k) per process — the Similarity
-  // coarseShared / GbtModel.fittedShared pattern; same staleness caveat
-  // (key is the dataset path; Bench/Verify are single-run processes).
-  private[graft] val pcaShared =
-    scala.collection.concurrent.TrieMap.empty[(String, Int), PcaModel]
-
-  def fit(embeddings: DataFrame, k: Int,
-          cacheKey: Option[String] = None): PcaModel = cacheKey match {
-    case Some(key) => pcaShared.getOrElseUpdate((key, k), fitImpl(embeddings, k))
-    case None      => fitImpl(embeddings, k)
-  }
-
-  private def fitImpl(embeddings: DataFrame, k: Int): PcaModel = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val base = Similarity.withNormalized(embeddings)
-    val sample = Similarity.boundedTrainSample(base)
-      .select(array_to_vector(col("nv")).as("fv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // ≤ trainCap rows
-    try {
-      val mean = sample
-        .select(org.apache.spark.ml.stat.Summarizer.mean(col("fv")).as("m"))
-        .head().getAs[org.apache.spark.ml.linalg.Vector]("m")
-      val model = new org.apache.spark.ml.feature.PCA()
-        .setK(k).setInputCol("fv").setOutputCol("pv").fit(sample)
-      val pc = model.pc // d rows × k cols
-      val comps = (0 until k).map(i =>
-        (0 until pc.numRows).map(j => pc(j, i)).toIndexedSeq)
-      PcaModel(mean.toArray.toIndexedSeq, comps,
-        model.explainedVariance.toArray.toIndexedSeq)
-    } finally sample.unpersist(blocking = false)
-  }
+  /** Fit on the bounded sample. Memoized through util.FitMemo: the same
+    * corpus and `k` cost one fit per process (q_knn_pca and the pca arm of
+    * q_knn_recall_all share it), and a subset or rewritten corpus refits. */
+  def fit(embeddings: DataFrame, k: Int): PcaModel =
+    graft.util.FitMemo("pca", embeddings, k) {
+      import org.apache.spark.ml.functions.array_to_vector
+      val base = Similarity.withNormalized(embeddings)
+      val sample = Similarity.boundedTrainSample(base)
+        .select(array_to_vector(col("nv")).as("fv"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // ≤ trainCap rows
+      try {
+        val mean = sample
+          .select(org.apache.spark.ml.stat.Summarizer.mean(col("fv")).as("m"))
+          .head().getAs[org.apache.spark.ml.linalg.Vector]("m")
+        val model = new org.apache.spark.ml.feature.PCA()
+          .setK(k).setInputCol("fv").setOutputCol("pv").fit(sample)
+        val pc = model.pc // d rows × k cols
+        val comps = (0 until k).map(i =>
+          (0 until pc.numRows).map(j => pc(j, i)).toIndexedSeq)
+        PcaModel(mean.toArray.toIndexedSeq, comps,
+          model.explainedVariance.toArray.toIndexedSeq)
+      } finally sample.unpersist(blocking = false)
+    }
 
   /** Adds `pv` (k-dim centered projection of the `nv` column) as pure
     * column expressions: per output dim one sequential zip-fold dot plus a
@@ -83,9 +75,8 @@ object Pca {
     * components are orthonormal and `nv` is unit-norm, |pv|² / |nv − mean|²
     * is the fraction of this vector's (centered) energy the subspace
     * retains. */
-  def embedPca(embeddings: DataFrame, k: Int = 8,
-               cacheKey: Option[String] = None): DataFrame = {
-    val model = fit(embeddings, k, cacheKey)
+  def embedPca(embeddings: DataFrame, k: Int = 8): DataFrame = {
+    val model = fit(embeddings, k)
     val base = Similarity.withNormalized(embeddings)
     val meanLit = typedlit(model.mean)
     project(base, model)
@@ -107,10 +98,9 @@ object Pca {
     * row-local k-dim arithmetic; both rank cuts are the balanced two-phase
     * grouped top-k. */
   def knnPca(embeddings: DataFrame, numQueries: Int = 5, k: Int = 10,
-             pdim: Int = 16, refine: Int = 8,
-             cacheKey: Option[String] = None): DataFrame = {
+             pdim: Int = 16, refine: Int = 8): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
-    val model = fit(embeddings, pdim, cacheKey)
+    val model = fit(embeddings, pdim)
     val corpus = project(Similarity.withNormalized(embeddings), model)
       .withColumn("nrm", sqrt(Similarity.fastDot("embedding", "embedding")))
     val queries = corpus.filter(col("vec_id") < numQueries)

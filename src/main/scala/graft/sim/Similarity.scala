@@ -169,8 +169,7 @@ object Similarity {
     * cross-engine reproducible → rows-only for the oracle; recall@k vs
     * brute is the test contract. */
   def knnIvf(embeddings: DataFrame, numQueries: Int = 5, k: Int = 10,
-             nlist: Int = 16, nprobe: Int = 4,
-             cacheKey: Option[String] = None): DataFrame = {
+             nlist: Int = 16, nprobe: Int = 4): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     import org.apache.spark.ml.functions.array_to_vector
@@ -178,7 +177,7 @@ object Similarity {
     val base = withNormalized(embeddings)
     // coarse quantizer from the bounded sample; assignment is the ONLY
     // full-corpus pass before scoring
-    val model = trainCoarseKeyed(base, nlist, cacheKey)
+    val model = trainCoarse(base, nlist)
     val corpus = model.transform(base.withColumn("fv", array_to_vector(col("nv"))))
       .select(col("vec_id"), col("label"), col("embedding"),
         col("cell").cast("long").as("cell"))
@@ -258,38 +257,12 @@ object Similarity {
     base.orderBy(xxhash64(col("vec_id")).asc, col("vec_id").asc).limit(trainCap)
 
   // ---- shared quantizer fits -------------------------------------------
-  // One fit per (dataset key, params) per process (the GbtModel
-  // .fittedShared pattern): q_knn_ivf / q_knn_pq / q_knn_ivfpq /
-  // q_knn_recall_all / q_semantic_dedup all train the IDENTICAL seeded
-  // quantizers on the identical bounded sample, so refitting per query
-  // would produce the same centroids N times and burn N-1 KMeans fits.
-  // The memo holds driver-side centroid/codebook arrays (KBs), never
-  // data. Staleness caveat (same as GbtModel): the key is the dataset
-  // PATH — regenerating data under the same path within one JVM would
-  // serve stale centroids; Bench/Verify are single-run processes, so
-  // that cannot happen there.
-  private[graft] val coarseShared = scala.collection.concurrent.TrieMap
-    .empty[(String, Int), org.apache.spark.ml.clustering.KMeansModel]
-  private[graft] val codebookShared = scala.collection.concurrent.TrieMap
-    .empty[(String, Int, Int, Int), IndexedSeq[Seq[Seq[Float]]]]
-
-  private[sim] def trainCoarseKeyed(base: DataFrame, nlist: Int,
-      cacheKey: Option[String]): org.apache.spark.ml.clustering.KMeansModel =
-    cacheKey match {
-      case Some(key) =>
-        coarseShared.getOrElseUpdate((key, nlist), trainCoarse(base, nlist))
-      case None => trainCoarse(base, nlist)
-    }
-
-  private[sim] def trainCodebooksKeyed(base: DataFrame, subspaces: Int,
-      sub: Int, codebookSize: Int,
-      cacheKey: Option[String]): IndexedSeq[Seq[Seq[Float]]] =
-    cacheKey match {
-      case Some(key) =>
-        codebookShared.getOrElseUpdate((key, subspaces, sub, codebookSize),
-          trainCodebooks(base, subspaces, sub, codebookSize))
-      case None => trainCodebooks(base, subspaces, sub, codebookSize)
-    }
+  // q_knn_ivf / q_knn_pq / q_knn_ivfpq / q_knn_recall_all /
+  // q_semantic_dedup / the cluster map / the ANN index all train the
+  // IDENTICAL seeded quantizers on the identical bounded sample, so both
+  // fits go through util.FitMemo, keyed by the normalized input's
+  // canonical plan and files: the same corpus costs one coarse and one
+  // codebook fit per process, and a subset or rewritten corpus refits.
 
   /** Coarse-quantizer KMeans (seeded) fit on the bounded sample; the only
     * full-corpus pass a caller then makes is the cell-assignment transform.
@@ -297,37 +270,39 @@ object Similarity {
     * cells must partition the unit sphere — raw-space centroids split on
     * magnitude, which cosine ignores, wasting cells. */
   private[sim] def trainCoarse(base: DataFrame, nlist: Int)
-      : org.apache.spark.ml.clustering.KMeansModel = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val sample = boundedTrainSample(base)
-      .select(array_to_vector(col("nv")).as("fv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // ≤ trainCap rows
-    try new KMeans().setK(nlist).setSeed(7L).setMaxIter(10)
-      .setFeaturesCol("fv").setPredictionCol("cell").fit(sample)
-    finally sample.unpersist(blocking = false)
-  }
+      : org.apache.spark.ml.clustering.KMeansModel =
+    graft.util.FitMemo("ivf-coarse", base, nlist) {
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      val sample = boundedTrainSample(base)
+        .select(array_to_vector(col("nv")).as("fv"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // ≤ trainCap rows
+      try new KMeans().setK(nlist).setSeed(7L).setMaxIter(10)
+        .setFeaturesCol("fv").setPredictionCol("cell").fit(sample)
+      finally sample.unpersist(blocking = false)
+    }
 
   /** Per-subspace seeded codebooks trained on the same BOUNDED sample:
     * at 100 TB the corpus never feeds the fits, only the encode pass scans
     * it. The independent per-subspace fits run as concurrent Spark jobs
     * (seeded per subspace, so parallelism keeps determinism). */
   private[sim] def trainCodebooks(base: DataFrame, subspaces: Int, sub: Int,
-                             codebookSize: Int): IndexedSeq[Seq[Seq[Float]]] = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-    val cached = boundedTrainSample(base)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // ≤ trainCap rows
-    import scala.collection.parallel.CollectionConverters._
-    try (0 until subspaces).par.map { m =>
-      new KMeans().setK(codebookSize).setSeed(7L + m).setMaxIter(5)
-        .setInitMode("random") // k-means|| init costs extra passes per fit; random+seed is one
-        .setFeaturesCol("fv").setPredictionCol("c")
-        .fit(cached.select(array_to_vector(sliceM(col("nv"), sub, m)).as("fv")))
-        .clusterCenters.toSeq.map(_.toArray.toSeq.map(_.toFloat))
-    }.toIndexedSeq
-    finally cached.unpersist(blocking = false)
-  }
+                                  codebookSize: Int): IndexedSeq[Seq[Seq[Float]]] =
+    graft.util.FitMemo("pq-codebooks", base, subspaces, sub, codebookSize) {
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      val cached = boundedTrainSample(base)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK) // ≤ trainCap rows
+      import scala.collection.parallel.CollectionConverters._
+      try (0 until subspaces).par.map { m =>
+        new KMeans().setK(codebookSize).setSeed(7L + m).setMaxIter(5)
+          .setInitMode("random") // k-means|| init costs extra passes per fit; random+seed is one
+          .setFeaturesCol("fv").setPredictionCol("c")
+          .fit(cached.select(array_to_vector(sliceM(col("nv"), sub, m)).as("fv")))
+          .clusterCenters.toSeq.map(_.toArray.toSeq.map(_.toFloat))
+      }.toIndexedSeq
+      finally cached.unpersist(blocking = false)
+    }
 
   /** ADC shortlist → exact-cosine re-rank over `candidates` (rows with
     * qnv/qv/codes columns present). */
@@ -359,15 +334,13 @@ object Similarity {
   }
 
   def knnPq(embeddings: DataFrame, numQueries: Int = 5, k: Int = 10,
-            subspaces: Int = 8, codebookSize: Int = 16, refine: Int = 8,
-            cacheKey: Option[String] = None): DataFrame = {
+            subspaces: Int = 8, codebookSize: Int = 16, refine: Int = 8): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val base = withNormalized(embeddings)
     val dim = base.select(size(col("embedding"))).head().getInt(0)
     require(dim % subspaces == 0, s"dim $dim not divisible into $subspaces subspaces")
     val sub = dim / subspaces
-    val codebooks = trainCodebooksKeyed(base, subspaces, sub, codebookSize,
-      cacheKey)
+    val codebooks = trainCodebooks(base, subspaces, sub, codebookSize)
     val encoded = encodeCodes(base, codebooks, subspaces, sub)
     val queries = base.filter(col("vec_id") < numQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
@@ -387,7 +360,7 @@ object Similarity {
   def knnIvfPq(embeddings: DataFrame, numQueries: Int = 5, k: Int = 10,
                nlist: Int = 16, nprobe: Int = 8,
                subspaces: Int = 8, codebookSize: Int = 16,
-               refine: Int = 12, cacheKey: Option[String] = None): DataFrame = {
+               refine: Int = 12): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     val spark = embeddings.sparkSession
     import org.apache.spark.ml.functions.array_to_vector
@@ -399,13 +372,12 @@ object Similarity {
 
     // coarse quantizer from the bounded sample (assignment is the only
     // full-corpus pass before the code scan)
-    val coarse = trainCoarseKeyed(base, nlist, cacheKey)
+    val coarse = trainCoarse(base, nlist)
     val celled = coarse.transform(base.withColumn("fv", array_to_vector(col("nv"))))
       .select(col("vec_id"), col("label"), col("embedding"), col("nv"),
         col("cell").cast("long").as("cell"))
 
-    val codebooks = trainCodebooksKeyed(base, subspaces, sub, codebookSize,
-      cacheKey)
+    val codebooks = trainCodebooks(base, subspaces, sub, codebookSize)
     val encoded = encodeCodes(celled, codebooks, subspaces, sub)
 
     // each query probes its nprobe nearest cells (tiny literal centroids)
@@ -519,7 +491,7 @@ object Similarity {
     * `knnRecall` cannot cover. Rows-only (learned quantizers are
     * engine-local); FunctionsSpec asserts the ordering invariants. */
   def knnRecallSummary(embeddings: DataFrame, numQueries: Int = 5,
-                       k: Int = 10, cacheKey: Option[String] = None): DataFrame = {
+                       k: Int = 10): DataFrame = {
     // Optimization-round note (r13, measured at sf0.1): persisting `golden`
     // for its 8 arm consumers was tried and REVERTED (6.6-7.3 s → 7.9-8.1 s
     // steady-state). The arms union into ONE plan, so AQE's ReuseExchange
@@ -540,16 +512,11 @@ object Similarity {
     summarize("brute", knnBrute(embeddings, numQueries, k))
       .unionByName(summarize("bucketed", knnBucketed(embeddings, numQueries, k)))
       .unionByName(summarize("multiprobe", knnMultiProbe(embeddings, numQueries, k)))
-      .unionByName(summarize("ivf",
-        knnIvf(embeddings, numQueries, k, cacheKey = cacheKey)))
-      .unionByName(summarize("pq",
-        knnPq(embeddings, numQueries, k, cacheKey = cacheKey)))
-      .unionByName(summarize("ivfpq",
-        knnIvfPq(embeddings, numQueries, k, cacheKey = cacheKey)))
+      .unionByName(summarize("ivf", knnIvf(embeddings, numQueries, k)))
+      .unionByName(summarize("pq", knnPq(embeddings, numQueries, k)))
+      .unionByName(summarize("ivfpq", knnIvfPq(embeddings, numQueries, k)))
       .unionByName(summarize("lsh_tables", knnLshTables(embeddings, numQueries, k)))
-      .unionByName(summarize("pca",
-        Pca.knnPca(embeddings, numQueries, k,
-          cacheKey = cacheKey.map(_ + "#pca"))))
+      .unionByName(summarize("pca", Pca.knnPca(embeddings, numQueries, k)))
   }
 
   /** Semantic deduplication (the SemDeDup shape — Abbas et al.,
@@ -573,12 +540,11 @@ object Similarity {
     * re-scored with true cosine, so nothing is dropped on a false match).
     * Learned cells → rows-only oracle gate. */
   def semanticDedup(embeddings: DataFrame, nlist: Int = 16,
-                    threshold: Double = 0.9,
-                    cacheKey: Option[String] = None): DataFrame = {
+                    threshold: Double = 0.9): DataFrame = {
     graft.functions.GraftFunctions.register(embeddings.sparkSession)
     import org.apache.spark.ml.functions.array_to_vector
     val base = withNormalized(embeddings)
-    val coarse = trainCoarseKeyed(base, nlist, cacheKey)
+    val coarse = trainCoarse(base, nlist)
     val celled = coarse.transform(base.withColumn("fv", array_to_vector(col("nv"))))
       .select(col("vec_id"), col("label"), col("embedding"),
         col("cell").cast("long").as("cell"))

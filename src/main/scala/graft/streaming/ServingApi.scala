@@ -1,7 +1,6 @@
 package graft.streaming
 
 import graft.ml.{ModelRegistry, TrainedModel}
-import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.sql.SparkSession
 import org.json4s._
@@ -179,25 +178,14 @@ object ServingApi {
     * across the single, batch, reload and features routes. */
   final class HotRequestScorer(spark: SparkSession, registryRoot: String,
                                name: String, val fraudThreshold: Double = 0.5) {
-    @volatile private var cached: Option[(Long, GBTClassificationModel)] = None
+    private val models = new StreamScoring.LatestVersion(registryRoot, name,
+      (s, v) => ModelRegistry.loadGbt(s, registryRoot, name, Some(v)))
 
-    def loadedVersion: Option[Long] = cached.map(_._1)
+    def loadedVersion: Option[Long] = models.loadedVersion
 
-    /** Latest committed model, reloading only on version change; None when
-      * the registry has no committed version (routes answer 503). */
-    private def resolve(): Option[(Long, GBTClassificationModel)] =
-      ModelRegistry.latestVersion(spark, registryRoot, name).map { v =>
-        cached match {
-          case Some((have, m)) if have == v => (v, m)
-          case _ =>
-            val m = ModelRegistry.loadGbt(spark, registryRoot, name, Some(v))
-            cached = Some((v, m))
-            (v, m)
-        }
-      }
-
-    /** Score one validated transaction; None = no model committed yet. */
-    def score(txn: Txn): Option[Scored] = resolve().map { case (v, m) =>
+    /** Score one validated transaction; None = no model committed yet
+      * (routes answer 503). */
+    def score(txn: Txn): Option[Scored] = models.latest(spark).map { case (v, m) =>
       val p = m.predictProbability(Vectors.dense(txn.features))(1)
       Scored(txn, p, p >= fraudThreshold, scoreToRisk(p), v)
     }
@@ -206,7 +194,7 @@ object ServingApi {
       * batch scores under the same model version, like the reference's
       * single `predict_proba` call over the assembled frame. */
     def scoreBatch(txns: Seq[Txn]): Option[Seq[Scored]] =
-      resolve().map { case (v, m) =>
+      models.latest(spark).map { case (v, m) =>
         txns.map { t =>
           val p = m.predictProbability(Vectors.dense(t.features))(1)
           Scored(t, p, p >= fraudThreshold, scoreToRisk(p), v)
@@ -219,8 +207,8 @@ object ServingApi {
       * route exists for api.py:279 parity and for forcing a reload probe
       * from operations tooling. */
     def reload(): Option[Long] = {
-      cached = None
-      resolve().map(_._1)
+      models.clear()
+      models.latest(spark).map(_._1)
     }
 
     /** GET /features: (name, importance) sorted by importance desc, plus
@@ -229,7 +217,7 @@ object ServingApi {
       * GbtModel.importancesOf, which builds a DataFrame for the query
       * surface). */
     def importances(): Option[(Seq[(String, Double)], Long)] =
-      resolve().map { case (v, m) =>
+      models.latest(spark).map { case (v, m) =>
         (TrainedModel.FeatureCols.zip(m.featureImportances.toArray)
           .sortBy { case (n, i) => (-i, n) }, v)
       }

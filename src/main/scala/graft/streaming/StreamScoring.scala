@@ -1,9 +1,8 @@
 package graft.streaming
 
 import graft.ml.{ModelRegistry, TrainedModel}
-import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.ml.feature.VectorAssembler
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Real-time model scoring with hot reload — the reference's serving loop
@@ -32,31 +31,48 @@ object StreamScoring {
       .setInputCols(TrainedModel.FeatureCols.toArray).setOutputCol("fv")
       .transform(featureRows)
 
+  /** The artifact of a registry name's `latest` version, loaded again
+    * only when `latest` moved — the version cache every hot scorer shares.
+    * Driver-held, one instance per scorer. */
+  private[streaming] final class LatestVersion[A](registryRoot: String, name: String,
+                                                  load: (SparkSession, Long) => A) {
+    @volatile private var cached: Option[(Long, A)] = None
+
+    def loadedVersion: Option[Long] = cached.map(_._1)
+    def clear(): Unit = cached = None
+
+    /** The latest committed version and its artifact; None when the
+      * registry has no committed version. */
+    def latest(spark: SparkSession): Option[(Long, A)] =
+      ModelRegistry.latestVersion(spark, registryRoot, name).map { v =>
+        cached match {
+          case Some((have, a)) if have == v => (v, a)
+          case _ =>
+            val a = load(spark, v)
+            cached = Some((v, a))
+            (v, a)
+        }
+      }
+  }
+
   /** Per-batch scorer holding the current model; reloads from the
     * registry only when `latest` moved. Driver-held (foreachBatch runs on
     * the driver), so one instance serves the whole query lifetime. */
   final class HotModelScorer(registryRoot: String, name: String) {
-    @volatile private var cached: Option[(Long, GBTClassificationModel)] = None
+    private val models = new LatestVersion(registryRoot, name,
+      (spark, v) => ModelRegistry.loadGbt(spark, registryRoot, name, Some(v)))
 
     /** The version currently loaded (None before the first batch). */
-    def loadedVersion: Option[Long] = cached.map(_._1)
+    def loadedVersion: Option[Long] = models.loadedVersion
 
     /** Score one micro-batch with the registry's current latest model;
       * output rows carry the version that scored them (the reference's
       * serving response includes model_version for exactly this
       * lineage). */
     def scoreBatch(batch: DataFrame): DataFrame = {
-      val spark = batch.sparkSession
-      val v = ModelRegistry.latestVersion(spark, registryRoot, name)
-        .getOrElse(throw new IllegalStateException(
+      val (v, model) = models.latest(batch.sparkSession).getOrElse(
+        throw new IllegalStateException(
           s"no model '$name' in registry $registryRoot — train before serving"))
-      val model = cached match {
-        case Some((have, m)) if have == v => m
-        case _ =>
-          val m = ModelRegistry.loadGbt(spark, registryRoot, name, Some(v))
-          cached = Some((v, m))
-          m
-      }
       model.transform(batch)
         .withColumn("predicted_fraud", col("prediction").cast("long"))
         .withColumn("fraud_probability",
@@ -78,24 +94,18 @@ object StreamScoring {
     * Output rows carry index_version for lineage, like the model scorer. */
   final class HotIndexScorer(registryRoot: String, name: String,
                              k: Int = 10, nprobe: Int = 8, refine: Int = 12) {
-    import graft.sim.{AnnIndex, IvfPqIndex}
-    @volatile private var cached: Option[(Long, IvfPqIndex)] = None
+    import graft.sim.AnnIndex
+    private val indexes = new LatestVersion(registryRoot, name,
+      (spark, v) => AnnIndex.load(spark, registryRoot, name, Some(v)))
 
     /** The version currently loaded (None before the first batch). */
-    def loadedVersion: Option[Long] = cached.map(_._1)
+    def loadedVersion: Option[Long] = indexes.loadedVersion
 
     def scoreBatch(batch: DataFrame): DataFrame = {
       val spark = batch.sparkSession
-      val v = ModelRegistry.latestVersion(spark, registryRoot, name)
-        .getOrElse(throw new IllegalStateException(
+      val (v, index) = indexes.latest(spark).getOrElse(
+        throw new IllegalStateException(
           s"no index '$name' in registry $registryRoot — build before serving"))
-      val index = cached match {
-        case Some((have, i)) if have == v => i
-        case _ =>
-          val i = AnnIndex.load(spark, registryRoot, name, Some(v))
-          cached = Some((v, i))
-          i
-      }
       val encoded = spark.read
         .parquet(AnnIndex.corpusPath(spark, registryRoot, name, Some(v)))
         .withColumn("cell", col("cell").cast("long"))

@@ -57,25 +57,72 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.slotMismatches(live, wrong) == 1L)
   }
 
+  /** A private copy of the sf0.001 corpus: no other spec fits on its
+    * files, so fit counts over it start from zero. */
+  private def corpusCopy(): String = {
+    val p = java.nio.file.Files.createTempDirectory("ann-memo").resolve("emb.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$TinySf/embeddings.parquet"), p)
+    p.toString
+  }
+
   test("quantizer fits are shared per (dataset, params): one coarse + one codebook fit serve every keyed ANN query") {
     import graft.sim.Similarity
-    val key = Some(s"ann-shared-test:$TinySf")
-    val coarse0 = Similarity.coarseShared.size
-    val cb0 = Similarity.codebookShared.size
-    // the four queries that share the artifact in Bench/Verify
-    Similarity.knnIvf(emb, cacheKey = key).write.format("noop").mode("overwrite").save()
-    Similarity.knnPq(emb, cacheKey = key).write.format("noop").mode("overwrite").save()
-    Similarity.knnIvfPq(emb, cacheKey = key).write.format("noop").mode("overwrite").save()
-    val idx = AnnIndex.train(emb, cacheKey = key)
-    // one coarse entry (nlist=16) and one codebook entry (8x16) TOTAL
-    assert(Similarity.coarseShared.size == coarse0 + 1,
-      s"expected exactly one new coarse fit, cache grew by ${Similarity.coarseShared.size - coarse0}")
-    assert(Similarity.codebookShared.size == cb0 + 1,
-      s"expected exactly one new codebook fit, cache grew by ${Similarity.codebookShared.size - cb0}")
+    import graft.util.FitMemo
+    val path = corpusCopy()
+    def load() = spark.read.parquet(path)
+    val coarse0 = FitMemo.size("ivf-coarse")
+    val cb0 = FitMemo.size("pq-codebooks")
+    // the four operators that share the artifact in Bench/Verify, each on
+    // its own load of the corpus
+    Similarity.knnIvf(load()).write.format("noop").mode("overwrite").save()
+    Similarity.knnPq(load()).write.format("noop").mode("overwrite").save()
+    Similarity.knnIvfPq(load()).write.format("noop").mode("overwrite").save()
+    val idx = AnnIndex.train(load())
+    // one coarse fit (nlist=16) and one codebook fit (8x16) TOTAL
+    assert(FitMemo.size("ivf-coarse") == coarse0 + 1,
+      s"expected exactly one new coarse fit, got ${FitMemo.size("ivf-coarse") - coarse0}")
+    assert(FitMemo.size("pq-codebooks") == cb0 + 1,
+      s"expected exactly one new codebook fit, got ${FitMemo.size("pq-codebooks") - cb0}")
     // and the index is built from the SAME shared artifacts (bit-equal)
-    val centKey = Similarity.coarseShared.keys.find(_._1 == key.get).get
-    assert(idx.centroids == Similarity.coarseShared(centKey).clusterCenters
-      .toIndexedSeq.map(_.toArray.toSeq.map(_.toFloat)))
+    val shared = graft.sim.Clustering.centroids(load(), 16).orderBy("c_cell").collect()
+      .map(_.getSeq[Double](1).map(_.toFloat)).toIndexedSeq
+    assert(FitMemo.size("ivf-coarse") == coarse0 + 1)
+    assert(idx.centroids == shared)
+    // q_knn_incremental's base subset is another input: its own fits
+    AnnIndex.train(load().filter(col("vec_id") % 4 =!= 3))
+    assert(FitMemo.size("ivf-coarse") == coarse0 + 2)
+    assert(FitMemo.size("pq-codebooks") == cb0 + 2)
+  }
+
+  test("a corpus rewritten under the same path refits: the result equals a fresh fit of the new data") {
+    import graft.sim.Clustering
+    val path = java.nio.file.Files.createTempDirectory("ann-rewrite").resolve("emb.parquet").toString
+    val src = Tables.load(spark, TinySf, "embeddings")
+    def centroids(p: String) = Clustering.centroids(spark.read.parquet(p), 16)
+      .orderBy("c_cell").collect().map(_.getSeq[Double](1)).toSeq
+    src.write.parquet(path)
+    val before = centroids(path)
+    val rewritten = src.withColumn("embedding", reverse(col("embedding")))
+    rewritten.write.mode("overwrite").parquet(path)
+    val after = centroids(path)
+    val freshPath = java.nio.file.Files.createTempDirectory("ann-fresh").resolve("emb.parquet").toString
+    rewritten.write.parquet(freshPath)
+    assert(after != before, "the rewritten corpus was served the old centroids")
+    assert(after == centroids(freshPath))
+  }
+
+  test("an input whose plan is not deterministic is refitted on every call") {
+    import graft.util.FitMemo
+    val path = corpusCopy()
+    var fits = 0
+    def fit(df: org.apache.spark.sql.DataFrame) = FitMemo("spec-probe", df, 1) { fits += 1; fits }
+    fit(spark.read.parquet(path))
+    fit(spark.read.parquet(path))
+    assert(fits == 1)
+    val noisy = spark.read.parquet(path).withColumn("r", rand())
+    fit(noisy)
+    fit(noisy)
+    assert(fits == 3)
   }
 
   test("incremental append: base+delta store searches bit-identically to a from-scratch union encode") {

@@ -132,8 +132,10 @@ class FunctionsSpec extends SparkSpec {
     // Explained variance non-increasing, all positive.
     assert(m.explained.forall(_ > 0))
     assert(m.explained.zip(m.explained.tail).forall { case (a, b) => a >= b })
-    // Refit determinism (fixed sample + deterministic eigen).
-    val m2 = sim.Pca.fit(e, 8)
+    // Refit determinism (fixed sample + deterministic eigen). A
+    // repartitioned input is another plan, so this is a real second fit,
+    // not a memo hit.
+    val m2 = sim.Pca.fit(e.repartition(9), 8)
     assert(m2.components == m.components && m2.mean == m.mean)
 
     // Energy floor: the synthetic corpus is near-ISOTROPIC (no dominant
@@ -300,9 +302,11 @@ class FunctionsSpec extends SparkSpec {
     // end-to-end: the learned paths leave NO new persisted RDDs behind —
     // the old shape leaked a corpus-sized MEMORY_AND_DISK persist into the
     // fit (delta-based: other suites legitimately keep session caches)
+    // (an input no other test fits, so both quantizer fits really run)
+    val fresh = e.repartition(11)
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    Similarity.knnIvf(e).collect()
-    Similarity.knnIvfPq(e).collect()
+    Similarity.knnIvf(fresh).collect()
+    Similarity.knnIvfPq(fresh).collect()
     val leaked = spark.sparkContext.getPersistentRDDs.view
       .filterKeys(!before.contains(_)).values.map(_.name).toSeq
     assert(leaked.isEmpty, s"leaked persisted RDDs: $leaked")

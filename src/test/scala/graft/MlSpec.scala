@@ -110,6 +110,40 @@ class MlSpec extends SparkSpec {
     } finally feats.unpersist()
   }
 
+  test("seededCvSelect frees every fold frame when a grid point's fit fails") {
+    import spark.implicits._
+    import org.apache.spark.ml.linalg.Vectors
+    val train = (0 until 40).map { i =>
+      (if (i % 3 == 0) 1.0 else 0.0, Vectors.dense(i.toDouble, (i % 5).toDouble), 1.0)
+    }.toDF("label", "fv", "w")
+    val gbt = GbtModel.baseEstimator(2)
+    // the "w" point fits (and caches its folds); a weight column the
+    // frame lacks passes param validation and fails inside fit
+    val grid = new org.apache.spark.ml.tuning.ParamGridBuilder()
+      .addGrid(gbt.weightCol, Seq("w", "no_such_weight")).build()
+    // a fold frame is a cached scan of an existing RDD (the kFold split)
+    def foldCaches = spark.sparkContext.getPersistentRDDs.values
+      .filter(r => Option(r.name).exists(_.contains("ExistingRDD"))).map(_.id).toSet
+    val before = foldCaches
+    intercept[Exception](GbtModel.seededCvSelect(gbt, train, grid, numFolds = 2, seed = 42L))
+    val left = foldCaches -- before
+    assert(left.isEmpty, s"fold frames left cached after a failed fit: $left")
+  }
+
+  test("q_model_reload_eval and q_model_importance share one GBT fit") {
+    // a private copy of the tables: no other spec fits on these files
+    val dir = java.nio.file.Files.createTempDirectory("gbt-memo")
+    Seq("orders", "customer", "nation", "region", "lineitem").foreach { t =>
+      java.nio.file.Files.copy(java.nio.file.Paths.get(s"$TinySf/$t.parquet"),
+        dir.resolve(s"$t.parquet"))
+    }
+    val fits0 = graft.util.FitMemo.size("gbt")
+    SparkEntry.queries("q_model_reload_eval")(spark, dir.toString).collect()
+    SparkEntry.queries("q_model_importance")(spark, dir.toString).collect()
+    assert(graft.util.FitMemo.size("gbt") == fits0 + 1,
+      s"expected one shared fit, got ${graft.util.FitMemo.size("gbt") - fits0}")
+  }
+
   test("registry round trip: reloaded model scores identically and versions advance") {
     val feats = fullFeatures.cache()
     val root = java.nio.file.Files.createTempDirectory("graft-registry-spec").toString

@@ -182,6 +182,35 @@ class PlansSpec extends SparkSpec {
     }
   }
 
+  test("a LIMIT over the as-of join stops its codegen loop without a codegen-contract warning") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("asof-limit-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(classOf[graft.plans.AsOfJoinExec]).asInstanceOf[Logger]
+    logger.addAppender(capture)
+    try withoutAqe {
+      // one key: every probe row sits in one partition, in time order
+      val l = (1L to 20L).map(t => (t, 1L, t * 10)).toDF("event_id", "user_id", "ts_us")
+      val r = Seq((1L, 35L, 1.5), (1L, 95L, 2.5)).toDF("user_id", "ts_us", "value")
+      val joined = NativeAsOf.asOf(l, r, "user_id", "ts_us", "value")
+      val limited = joined.limit(5).orderBy("event_id")
+      val stages = codegenStagesWithAsOf(limited)
+      assert(stages.exists(_.exists(_.isInstanceOf[org.apache.spark.sql.execution.LocalLimitExec])),
+        limited.queryExecution.executedPlan.toString.take(1500))
+      assert(limited.collect().toSeq == joined.orderBy("event_id").collect().toSeq.take(5))
+    } finally logger.removeAppender(capture)
+    assert(!logged.asScala.exists(_.contains("[BUG]")), logged.asScala.mkString("\n"))
+  }
+
   test("native as-of plan is the custom exec with one exchange+sort per side") {
     val (err, pur) = eventSides
     val df = NativeAsOf.asOf(err, pur, "user_id", "ts_us", "value")
