@@ -57,8 +57,9 @@ case class FloatVecDot(left: Expression, right: Expression)
 }
 
 /** Registration for graft's native expressions. Operators call `register`
-  * idempotently on their session; deployments that prefer config wiring
-  * can set spark.sql.extensions=graft.functions.GraftExtensions. */
+  * on their session (a no-op once the names are there); deployments that
+  * prefer config wiring can set
+  * spark.sql.extensions=graft.functions.GraftExtensions. */
 object GraftFunctions {
   val builder: Seq[Expression] => Expression = exprs => FloatVecDot(exprs.head, exprs(1))
   val intersectBuilder: Seq[Expression] => Expression =
@@ -234,41 +235,36 @@ object GraftFunctions {
     MultiMatchCount(exprs.head, exprs(1))
   }
 
+  /** Every graft SQL function: (name, expression class, builder). */
+  val all: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[FloatVecDot], builder),
+    ("nfc_normalize", classOf[NfcNormalize], nfcBuilder),
+    ("levenshtein_leq", classOf[BandedLevenshtein], bandedLevBuilder),
+    ("jaro_winkler", classOf[JaroWinkler], jaroWinklerBuilder),
+    ("sorted_intersect_count", classOf[SortedIntersectCount], intersectBuilder),
+    ("morton2", classOf[Morton2], mortonBuilder),
+    ("topk_freq", classOf[TopKFreq], topkFreqBuilder),
+    ("bottomk_sample", classOf[BottomKSample], bottomkBuilder),
+    ("bottomk_qsk", classOf[BottomKQsk], bottomkQskBuilder),
+    ("kmv_sketch", classOf[KmvSketch], kmvBuilder),
+    ("kmv_merge_agg", classOf[KmvMergeAgg], kmvMergeBuilder),
+    ("cms_sketch", classOf[CmsSketch], cmsBuilder),
+    ("cms_merge_agg", classOf[CmsMergeAgg], cmsMergeBuilder),
+    ("deflate_len", classOf[DeflateLen], deflateLenBuilder),
+    ("multi_match", classOf[MultiMatch], multiMatchBuilder),
+    ("multi_redact", classOf[MultiRedact], multiRedactBuilder),
+    ("multi_match_count", classOf[MultiMatchCount], multiMatchCountBuilder))
+
+  /** Registers every graft function the session's registry does not hold
+    * yet (GraftExtensions injects them all at session build); a name
+    * already present is left as it is, so repeated calls are free. */
   def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", builder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", nfcBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "levenshtein_leq", bandedLevBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler", jaroWinklerBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count", intersectBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "morton2", mortonBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "topk_freq", topkFreqBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_sample", bottomkBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bottomk_qsk", bottomkQskBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_sketch", kmvBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_merge_agg", kmvMergeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_sketch", cmsBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cms_merge_agg", cmsMergeBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_len", deflateLenBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_match", multiMatchBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_redact", multiRedactBuilder, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "multi_match_count", multiMatchCountBuilder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    registry.synchronized {
+      for ((name, cls, build) <- all if !registry.functionExists(FunctionIdentifier(name)))
+        registry.registerFunction(FunctionIdentifier(name),
+          new ExpressionInfo(cls.getName, name), build)
+    }
   }
 
   /** Runtime installation of graft's optimizer rules (for sessions not
@@ -285,70 +281,10 @@ object GraftFunctions {
   * planner strategy. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[FloatVecDot].getName, "vec_dot"),
-      GraftFunctions.builder))
-    ext.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      GraftFunctions.intersectBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("levenshtein_leq"),
-      new ExpressionInfo(classOf[BandedLevenshtein].getName, "levenshtein_leq"),
-      GraftFunctions.bandedLevBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("jaro_winkler"),
-      new ExpressionInfo(classOf[JaroWinkler].getName, "jaro_winkler"),
-      GraftFunctions.jaroWinklerBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("deflate_len"),
-      new ExpressionInfo(classOf[DeflateLen].getName, "deflate_len"),
-      GraftFunctions.deflateLenBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("morton2"),
-      new ExpressionInfo(classOf[Morton2].getName, "morton2"),
-      GraftFunctions.mortonBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("topk_freq"),
-      new ExpressionInfo(classOf[TopKFreq].getName, "topk_freq"),
-      GraftFunctions.topkFreqBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bottomk_sample"),
-      new ExpressionInfo(classOf[BottomKSample].getName, "bottomk_sample"),
-      GraftFunctions.bottomkBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bottomk_qsk"),
-      new ExpressionInfo(classOf[BottomKQsk].getName, "bottomk_qsk"),
-      GraftFunctions.bottomkQskBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_sketch"),
-      new ExpressionInfo(classOf[KmvSketch].getName, "kmv_sketch"),
-      GraftFunctions.kmvBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("kmv_merge_agg"),
-      new ExpressionInfo(classOf[KmvMergeAgg].getName, "kmv_merge_agg"),
-      GraftFunctions.kmvMergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cms_sketch"),
-      new ExpressionInfo(classOf[CmsSketch].getName, "cms_sketch"),
-      GraftFunctions.cmsBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("cms_merge_agg"),
-      new ExpressionInfo(classOf[CmsMergeAgg].getName, "cms_merge_agg"),
-      GraftFunctions.cmsMergeBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("multi_match"),
-      new ExpressionInfo(classOf[MultiMatch].getName, "multi_match"),
-      GraftFunctions.multiMatchBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("multi_redact"),
-      new ExpressionInfo(classOf[MultiRedact].getName, "multi_redact"),
-      GraftFunctions.multiRedactBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("multi_match_count"),
-      new ExpressionInfo(classOf[MultiMatchCount].getName, "multi_match_count"),
-      GraftFunctions.multiMatchCountBuilder))
+    GraftFunctions.all.foreach { case (name, cls, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(cls.getName, name), build))
+    }
     ext.injectOptimizerRule(_ => graft.plans.FuseVecDot)
     ext.injectOptimizerRule(_ => graft.plans.MvRewrite)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -9,25 +9,30 @@ import org.apache.spark.sql.functions._
   * on for silver-layer writes.
   * Ref: /root/reference/spark_jobs/utils/delta_utils.py (upsert_delta).
   *
-  * Plan shape: one shuffle on the key (anti-join target∖source) + union.
-  * At 100 TB the anti-join benefits from pre-bucketed storage on the
-  * merge key; with partition-aligned inputs Catalyst elides the exchange.
+  * Plan shape: ONE full-outer join on the key — one key shuffle per side,
+  * no aggregate, no union. Which side a joined row has decides its
+  * `_merge_action` (target only: kept; source only: inserted; both:
+  * updated), and a projection picks each column from the side that wins
+  * it. Because the output is one join's partitions, a partitioned write
+  * emits one file per (task, partition value): a MERGE'd snapshot never
+  * inherits its predecessor's file fragmentation, as a union of per-branch
+  * outputs did. Keys are null-rejecting equi-join keys: a null-keyed row
+  * never matches, so it is kept (target) or inserted (source).
+  *
+  * One matched row per (target row, source row) pair: a key held twice on
+  * either side yields one `updated` row per pair. Silver callers dedup
+  * their source first and every target is a MERGE output, so both sides
+  * carry each key once there. At 100 TB the join benefits from
+  * pre-bucketed storage on the merge key; with partition-aligned inputs
+  * Catalyst elides the exchanges.
   */
 object MergeUpsert {
 
   /** `source` upserted into `target` on `keys`; `_merge_action` marks
-    * what happened to each surviving row. */
-  def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
-    val matchedKeys = source.select(keys.map(col): _*).distinct()
-    val kept = target.join(matchedKeys, keys, "left_anti")
-      .withColumn("_merge_action", lit("kept"))
-    val updatedKeys = target.select(keys.map(col): _*).distinct()
-    val fromSource = source.join(updatedKeys, keys, "left_semi")
-      .withColumn("_merge_action", lit("updated"))
-    val inserted = source.join(updatedKeys, keys, "left_anti")
-      .withColumn("_merge_action", lit("inserted"))
-    kept.unionByName(fromSource).unionByName(inserted)
-  }
+    * what happened to each surviving row. The same-schema case of
+    * [[mergeEvolve]]. */
+  def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame =
+    mergeEvolve(target, source, keys)
 
   /** MERGE with schema evolution — the Delta `autoMerge` behavior the
     * reference turns on for every silver write (ref:
@@ -41,11 +46,7 @@ object MergeUpsert {
     *  - unmatched target rows get null for newly-added source columns;
     *  - inserted source rows get null for target-only columns.
     * Shared columns must keep their type — a silent cast on 100 TB of
-    * history is a data bug, so a mismatch throws instead.
-    *
-    * Plan shape: same single key shuffle as `merge`; the matched branch
-    * becomes an inner join (it must pull target-only column values) only
-    * when the target actually has columns the source lacks. */
+    * history is a data bug, so a mismatch throws instead. */
   def mergeEvolve(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
     val tTypes = target.schema.map(f => f.name -> f.dataType).toMap
     val sTypes = source.schema.map(f => f.name -> f.dataType).toMap
@@ -53,27 +54,21 @@ object MergeUpsert {
     require(mismatched.isEmpty,
       s"schema evolution cannot change column types: ${mismatched.toSeq.sorted
         .map(c => s"$c: ${tTypes(c)} -> ${sTypes(c)}").mkString(", ")}")
-
-    val targetOnly = target.columns.filterNot(sTypes.contains).toSeq
-    val sourceOnly = source.columns.filterNot(tTypes.contains).toSeq
-    if (targetOnly.isEmpty && sourceOnly.isEmpty) return merge(target, source, keys)
     require(keys.forall(k => tTypes.contains(k) && sTypes.contains(k)),
       s"merge keys $keys must exist on both sides")
 
-    val kept = target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .withColumns(sourceOnly.map(c => c -> lit(null).cast(sTypes(c))).toMap)
-      .withColumn("_merge_action", lit("kept"))
-    // matched: source columns win, target-only columns survive the update
-    val updated = source.join(
-        target.select((keys ++ targetOnly).map(col): _*), keys, "inner")
-      .withColumn("_merge_action", lit("updated"))
-    val inserted = source.join(target.select(keys.map(col): _*).distinct(), keys, "left_anti")
-      .withColumns(targetOnly.map(c => c -> lit(null).cast(tTypes(c))).toMap)
-      .withColumn("_merge_action", lit("inserted"))
-
-    val outCols = (target.columns ++ sourceOnly) :+ "_merge_action"
-    kept.select(outCols.map(col): _*)
-      .unionByName(updated.select(outCols.map(col): _*))
-      .unionByName(inserted.select(outCols.map(col): _*))
+    val joined = target.withColumn("_in_target", lit(true)).as("t")
+      .join(source.withColumn("_in_source", lit(true)).as("s"), keys, "full_outer")
+    def side(s: String, c: String) = col(s"$s.`$c`")
+    val fromSource = col("_in_source").isNotNull
+    val targetCols = target.columns.toSeq.map { c =>
+      if (keys.contains(c)) col(c) // the join's coalesced key
+      else if (sTypes.contains(c)) when(fromSource, side("s", c)).otherwise(side("t", c)).as(c)
+      else side("t", c)
+    }
+    val sourceOnly = source.columns.toSeq.filterNot(tTypes.contains).map(side("s", _))
+    val action = when(col("_in_target").isNull, lit("inserted"))
+      .when(fromSource, lit("updated")).otherwise(lit("kept"))
+    joined.select((targetCols ++ sourceOnly) :+ action.as("_merge_action"): _*)
   }
 }

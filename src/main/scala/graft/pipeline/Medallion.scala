@@ -252,32 +252,50 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     * late-arriving slice re-aggregates its partitions, never the full
     * history. */
   def runGoldIncremental(dates: Seq[String]): Unit = {
-    val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val silverSlice = readSilver("orders_enriched")
-        .filter(col("order_date").isin(dates: _*))
-      Revenue.revenueDaily(silverSlice)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("order_date")
-        .parquet(path("gold", "revenue_daily"))
-      val eventsSlice = eventsForGold
-        .filter(col("event_date").isin(dates: _*)) // partition-pruned
-      FraudSummary.fraudSummaryDaily(eventsSlice)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy("event_date")
-        .parquet(path("gold", "fraud_summary"))
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    refreshRevenueDaily(dates)
+    overwritePartitions(FraudSummary.fraudSummaryDaily(
+        eventsForGold.filter(col("event_date").isin(dates: _*))), // partition-pruned
+      "fraud_summary", "event_date", dates)
+  }
+
+  /** Re-aggregate revenue_daily for `dates` from the latest silver. */
+  private def refreshRevenueDaily(dates: Seq[String]): Unit =
+    overwritePartitions(Revenue.revenueDaily(readSilver("orders_enriched")
+        .filter(col("order_date").isin(dates: _*))),
+      "revenue_daily", "order_date", dates)
+
+  /** Make gold `table`'s `partitionCol` partitions for `dates` hold
+    * exactly `df`: a per-write dynamic partition overwrite (the session
+    * conf is never touched) replaces the partitions `df` has rows for, and
+    * a date `df` has no row for — every order moved off it — is deleted
+    * instead of left stale. A replaced partition holds only files this
+    * write named, so a date whose file listing is unchanged by the write
+    * got no rows; finding it costs two listings, no Spark job. */
+  private def overwritePartitions(df: DataFrame, table: String, partitionCol: String,
+                                  dates: Seq[String]): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path("gold", table))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def files(d: String): Set[String] = {
+      val p = new org.apache.hadoop.fs.Path(dir, s"$partitionCol=$d")
+      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
+    }
+    val before = dates.map(d => d -> files(d)).filter(_._2.nonEmpty)
+    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCol).parquet(path("gold", table))
+    for ((d, old) <- before if files(d) == old)
+      fs.delete(new org.apache.hadoop.fs.Path(dir, s"$partitionCol=$d"), true)
   }
 
   /** CDC-driven gold maintenance — the closed loop silverChanges was built
     * to feed: diff two silver snapshots, project the AFFECTED date
     * partitions out of the feed (a delete or date-move refreshes the OLD
     * date, an insert the NEW — both sides of the feed contribute), and
-    * refresh exactly those gold partitions. The driver collects DATES
-    * (partition grain, like manifest planning), never rows; everything
-    * row-shaped stays distributed. Returns the refreshed dates — empty
-    * feed, no gold I/O at all. */
+    * refresh exactly those partitions of the SILVER-derived gold table,
+    * revenue_daily. fraud_summary derives from bronze events, which an
+    * orders change feed cannot change, so it is left alone. The driver
+    * collects DATES (partition grain, like manifest planning), never rows;
+    * everything row-shaped stays distributed. Returns the refreshed dates
+    * — empty feed, no gold I/O at all. */
   def runGoldIncrementalFromChanges(fromVersion: Long, toVersion: Long,
       attrs: Seq[String] = Seq("o_totalprice", "status_normalized"))
       : Seq[String] = {
@@ -289,7 +307,7 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       .filter(col("d").isNotNull)
       .distinct()
       .collect().map(_.getString(0)).toSeq.sorted
-    if (dates.nonEmpty) runGoldIncremental(dates)
+    if (dates.nonEmpty) refreshRevenueDaily(dates)
     dates
   }
 
@@ -297,10 +315,12 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
 
   /** The streaming lakehouse loop closed end-to-end: every micro-batch of
     * order updates MERGE-commits a new silver version and then refreshes
-    * ONLY the gold partitions its change feed touched — streaming
-    * ingestion driving CDC-incremental gold, which is the reference's
-    * operating mode (Kafka → Delta MERGE → scheduled gold refresh) with
-    * the scheduler removed: gold staleness is one micro-batch, and the
+    * ONLY the partitions of silver-derived gold (revenue_daily) its change
+    * feed touched. Event-derived gold (fraud_summary) is left alone: an
+    * orders batch cannot change it. This is streaming ingestion driving
+    * CDC-incremental gold, which is the reference's operating mode
+    * (Kafka → Delta MERGE → scheduled gold refresh) with the scheduler
+    * removed: gold staleness is one micro-batch, and the
     * per-batch gold cost is proportional to the dates the batch touched,
     * never to history.
     *

@@ -18,6 +18,35 @@ class FunctionsSpec extends SparkSpec {
     assert(both.count() > 0)
   }
 
+  test("register adds only missing functions: a repeat call replaces nothing") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import scala.jdk.CollectionConverters._
+    val session = spark.newSession()
+    val registry = session.sessionState.functionRegistry
+    // a session whose registry lacks vec_dot: register must add it back
+    registry.dropFunction(FunctionIdentifier("vec_dot"))
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("register-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger(registry.getClass).asInstanceOf[Logger]
+    logger.addAppender(capture)
+    try {
+      GraftFunctions.register(session)
+      GraftFunctions.register(session)
+    } finally logger.removeAppender(capture)
+    val replaced = logged.asScala.filter(_.contains("replaced a previously registered"))
+    assert(replaced.isEmpty, replaced.mkString("\n"))
+    assert(GraftFunctions.all.forall(f => registry.functionExists(FunctionIdentifier(f._1))))
+    assert(session.sql("SELECT vec_dot(array(1f, 2f), array(3f, 4f))").head().getDouble(0) == 11.0)
+  }
+
   test("vec_dot handles nulls and empty arrays") {
     GraftFunctions.register(spark)
     import spark.implicits._

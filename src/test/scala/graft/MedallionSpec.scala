@@ -1,7 +1,9 @@
 package graft
 
 import graft.pipeline.Medallion
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class MedallionSpec extends SparkSpec {
 
@@ -83,31 +85,32 @@ class MedallionSpec extends SparkSpec {
     assert(m.readGold("revenue_daily").select("order_date").distinct().count() > 3)
   }
 
-  test("CDC-driven incremental gold refreshes exactly the changed dates " +
-    "and converges to the full recompute") {
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh_cdc").toString
+  /** A built warehouse (silver v1) plus one upsert (v2) of 40 orders
+    * rewritten by `touch`; returns (medallion, v1, v2, the dates the
+    * upsert touched on either side, the warehouse). */
+  private def cdcFixture(name: String)(touch: (Medallion, DataFrame) => DataFrame)
+      : (Medallion, Long, Long, Seq[String], String) = {
+    val wh = java.nio.file.Files.createTempDirectory(name).toString
     val m = new Medallion(spark, TinySf, wh)
     m.runAll() // silver v1, gold computed from it
     val v1 = m.latestVersion("orders_enriched").get
 
-    // touch a handful of orders on a known set of dates: double the price
     val current = m.readSilver("orders_enriched").drop("_merge_action")
     val victimKeys = current.orderBy("o_orderkey").limit(40)
       .select("o_orderkey").collect().map(_.getLong(0)).toSet
-    val touched = current
-      .filter(col("o_orderkey").isin(victimKeys.toSeq: _*))
-      .withColumn("o_totalprice", col("o_totalprice") * 2)
-    val expectedDates = touched.select(col("order_date").cast("string"))
+    val victims = current.filter(col("o_orderkey").isin(victimKeys.toSeq: _*))
+    val touched = touch(m, victims)
+    val expectedDates = victims.select("order_date").union(touched.select("order_date"))
+      .select(col("order_date").cast("string"))
       .distinct().collect().map(_.getString(0)).toSeq.sorted
     val v2 = m.upsertSilver("orders_enriched", touched,
       Seq("o_orderkey"), "order_date")
     assert(v2 > v1)
+    (m, v1, v2, expectedDates, wh)
+  }
 
-    // gold is now stale for exactly those dates; the CDC loop must find
-    // them from the feed alone and refresh only them
-    val refreshed = m.runGoldIncrementalFromChanges(v1, v2)
-    assert(refreshed == expectedDates, s"$refreshed != $expectedDates")
-
+  /** revenue_daily as stored equals the full recompute from latest silver. */
+  private def assertRevenueMatchesRecompute(m: Medallion): Unit = {
     val dims = Seq("order_date", "region_name", "status_normalized", "amount_tier")
     val fullDf = graft.gold.Revenue.revenueDaily(
       m.readSilver("orders_enriched").drop("_merge_action"))
@@ -119,9 +122,71 @@ class MedallionSpec extends SparkSpec {
       .select(cols.head, cols.tail: _*)
       .orderBy(dims.head, dims.tail: _*).collect().toSeq
     assert(after == full, "incremental gold diverged from the full recompute")
+  }
+
+  /** Relative paths of the parquet data files under `dir`. */
+  private def dataFiles(dir: String): Set[String] = {
+    val root = java.nio.file.Paths.get(dir)
+    val s = java.nio.file.Files.walk(root)
+    try s.iterator().asScala
+      .filter(f => f.getFileName.toString.endsWith(".parquet") &&
+        !f.getFileName.toString.startsWith("."))
+      .map(f => root.relativize(f).toString).toSet
+    finally s.close()
+  }
+
+  test("CDC-driven incremental gold refreshes exactly the changed dates " +
+    "and converges to the full recompute") {
+    // touch a handful of orders on a known set of dates: double the price
+    val (m, v1, v2, expectedDates, _) = cdcFixture("graft_wh_cdc")((_, v) =>
+      v.withColumn("o_totalprice", col("o_totalprice") * 2))
+    // gold is now stale for exactly those dates; the CDC loop must find
+    // them from the feed alone and refresh only them
+    val refreshed = m.runGoldIncrementalFromChanges(v1, v2)
+    assert(refreshed == expectedDates, s"$refreshed != $expectedDates")
+    assertRevenueMatchesRecompute(m)
 
     // an empty diff (v2 vs v2) must do nothing
     assert(m.runGoldIncrementalFromChanges(v2, v2).isEmpty)
+  }
+
+  test("a CDC refresh rewrites revenue_daily only: fraud_summary's files " +
+    "stay as they were") {
+    // move the orders onto the first day that holds events, so the
+    // refreshed dates include a fraud_summary partition
+    def eventDays(m: Medallion) = m.readGold("fraud_summary")
+      .select(col("event_date").cast("string")).distinct()
+      .collect().map(_.getString(0)).toSeq.sorted
+    val (m, v1, v2, expectedDates, wh) = cdcFixture("graft_wh_cdc_rev")((m, v) =>
+      v.withColumn("order_date", lit(eventDays(m).head).cast("date")))
+    assert(expectedDates.exists(eventDays(m).contains))
+    val before = dataFiles(s"$wh/gold/fraud_summary")
+    assert(before.nonEmpty)
+    assert(m.runGoldIncrementalFromChanges(v1, v2) == expectedDates)
+    // an orders change feed cannot change event-derived gold
+    assert(dataFiles(s"$wh/gold/fraud_summary") == before)
+    assertRevenueMatchesRecompute(m)
+  }
+
+  test("repeated CDC upserts do not fragment silver: no version has more " +
+    "files than the first upsert wrote") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_frag").toString
+    val m = new Medallion(spark, TinySf, wh)
+    m.runBronze()
+    m.runSilver() // v1: the base build
+    val base = m.readSilver("orders_enriched")
+      .select("o_orderkey", "o_orderstatus", "status_normalized", "order_date")
+      .orderBy("o_orderkey")
+    val rows = base.limit(90).collect().toSeq
+    // three batches of the same shape, 30 orders each, as a CDC stream
+    // lands them
+    val files = (0 until 3).map { i =>
+      val batch = spark.createDataFrame(rows.slice(30 * i, 30 * i + 30).asJava, base.schema)
+        .withColumn("status_normalized", lit(s"batch_$i"))
+      val v = m.upsertSilver("orders_enriched", batch, Seq("o_orderkey"), "order_date")
+      dataFiles(s"$wh/silver/orders_enriched/v=$v").size
+    }
+    assert(files.tail.forall(_ <= files.head), s"files per version: $files")
   }
 
   test("bronze reads merge evolved schemas across writes") {

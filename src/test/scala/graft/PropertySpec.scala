@@ -183,6 +183,62 @@ class PropertySpec extends SparkSpec {
   private def got2HasCol(names: Array[String], c: String): Boolean =
     names.contains(c)
 
+  test("property: the one-join MERGE returns the three-branch MERGE's rows " +
+    "on random inputs: null keys, duplicate source keys, every schema shape") {
+    import spark.implicits._
+    def rowsOf(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    for (seed <- 1L to 3L; (hasB, hasC) <- Seq((true, false), (true, true),
+        (false, false), (false, true))) {
+      // target: unique keys plus null-keyed rows (null never equals null)
+      val tKeys = draw(Gen.listOfN(draw(Gen.choose(0, 10), seed),
+        Gen.choose(0L, 15L)), seed + 1).distinct.map(Option(_)) ++
+        Seq.fill(draw(Gen.choose(0, 2), seed + 2))(None)
+      val target = tKeys.zipWithIndex
+        .map { case (k, i) => (k, i, draw(Gen.choose(0, 99), seed + i)) }
+        .toDF("k", "a", "b")
+      // source: duplicate and null keys allowed
+      val sKeys = draw(Gen.listOfN(draw(Gen.choose(0, 12), seed + 3),
+        Gen.frequency(5 -> Gen.choose(0L, 20L).map(Option(_)), 1 -> Gen.const(Option.empty[Long]))),
+        seed + 5)
+      val base = sKeys.zipWithIndex
+        .map { case (k, i) => (k, 100 + i, 200 + i, 300 + i) }
+        .toDF("k", "a", "b", "c")
+      val source = base.drop(Seq("b" -> hasB, "c" -> hasC).collect {
+        case (c, false) => c }: _*)
+      val shape = s"seed=$seed hasB=$hasB hasC=$hasC"
+
+      val got = MergeUpsert.mergeEvolve(target, source, Seq("k"))
+      val want = ThreeBranchMerge.mergeEvolve(target, source, Seq("k"))
+      assert(got.columns.toSeq == want.columns.toSeq, shape)
+      assert(rowsOf(got) == rowsOf(want), shape)
+      if (hasB && !hasC) // the same-schema case, through merge
+        assert(rowsOf(MergeUpsert.merge(target, source, Seq("k"))) ==
+          rowsOf(ThreeBranchMerge.merge(target, source, Seq("k"))), shape)
+    }
+
+    // a shared column that changes type fails both, with the same message
+    val target = Seq((1L, 1)).toDF("k", "a")
+    val source = Seq((1L, 1L)).toDF("k", "a")
+    val got = intercept[IllegalArgumentException](
+      MergeUpsert.mergeEvolve(target, source, Seq("k")))
+    val want = intercept[IllegalArgumentException](
+      ThreeBranchMerge.mergeEvolve(target, source, Seq("k")))
+    assert(got.getMessage == want.getMessage)
+    intercept[IllegalArgumentException](MergeUpsert.merge(target, source, Seq("k")))
+  }
+
+  test("merge emits one updated row per matched target row when the target " +
+    "holds a key twice") {
+    import spark.implicits._
+    val target = Seq((1L, "t1"), (1L, "t2"), (2L, "t3")).toDF("k", "v")
+    val source = Seq((1L, "s")).toDF("k", "v")
+    val out = MergeUpsert.merge(target, source, Seq("k"))
+      .as[(Long, String, String)].collect().toSeq.sorted
+    // the three-branch merge emitted (1, s, updated) once: one per source row
+    assert(out == Seq((1L, "s", "updated"), (1L, "s", "updated"), (2L, "t3", "kept")))
+  }
+
+
   // ---- gap sessionization --------------------------------------------------
 
   test("property: sessionization matches the per-user fold oracle at exact " +
@@ -733,5 +789,54 @@ class PropertySpec extends SparkSpec {
       }
       assert(got.keySet == expected.keySet)
     }
+  }
+}
+
+/** The three-branch MERGE that `MergeUpsert` replaced (an anti-join, a
+  * semi- or inner join and another anti-join, unioned), kept verbatim as
+  * the equivalence oracle. */
+object ThreeBranchMerge {
+
+  def merge(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
+    val matchedKeys = source.select(keys.map(col): _*).distinct()
+    val kept = target.join(matchedKeys, keys, "left_anti")
+      .withColumn("_merge_action", lit("kept"))
+    val updatedKeys = target.select(keys.map(col): _*).distinct()
+    val fromSource = source.join(updatedKeys, keys, "left_semi")
+      .withColumn("_merge_action", lit("updated"))
+    val inserted = source.join(updatedKeys, keys, "left_anti")
+      .withColumn("_merge_action", lit("inserted"))
+    kept.unionByName(fromSource).unionByName(inserted)
+  }
+
+  def mergeEvolve(target: DataFrame, source: DataFrame, keys: Seq[String]): DataFrame = {
+    val tTypes = target.schema.map(f => f.name -> f.dataType).toMap
+    val sTypes = source.schema.map(f => f.name -> f.dataType).toMap
+    val mismatched = (tTypes.keySet & sTypes.keySet).filter(c => tTypes(c) != sTypes(c))
+    require(mismatched.isEmpty,
+      s"schema evolution cannot change column types: ${mismatched.toSeq.sorted
+        .map(c => s"$c: ${tTypes(c)} -> ${sTypes(c)}").mkString(", ")}")
+
+    val targetOnly = target.columns.filterNot(sTypes.contains).toSeq
+    val sourceOnly = source.columns.filterNot(tTypes.contains).toSeq
+    if (targetOnly.isEmpty && sourceOnly.isEmpty) return merge(target, source, keys)
+    require(keys.forall(k => tTypes.contains(k) && sTypes.contains(k)),
+      s"merge keys $keys must exist on both sides")
+
+    val kept = target.join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .withColumns(sourceOnly.map(c => c -> lit(null).cast(sTypes(c))).toMap)
+      .withColumn("_merge_action", lit("kept"))
+    // matched: source columns win, target-only columns survive the update
+    val updated = source.join(
+        target.select((keys ++ targetOnly).map(col): _*), keys, "inner")
+      .withColumn("_merge_action", lit("updated"))
+    val inserted = source.join(target.select(keys.map(col): _*).distinct(), keys, "left_anti")
+      .withColumns(targetOnly.map(c => c -> lit(null).cast(tTypes(c))).toMap)
+      .withColumn("_merge_action", lit("inserted"))
+
+    val outCols = (target.columns ++ sourceOnly) :+ "_merge_action"
+    kept.select(outCols.map(col): _*)
+      .unionByName(updated.select(outCols.map(col): _*))
+      .unionByName(inserted.select(outCols.map(col): _*))
   }
 }
