@@ -10,9 +10,18 @@ the side that runs first alternating from pair to pair. Each tree builds its
 own program into its own `.bench_build`. For every end-to-end metric of
 BENCHMARK.json it prints each side's median and quartiles, the distance
 between the quartiles, and how many pairs the working tree won (ties count
-for neither side); then each side's `failed` and `correct` per run. A gain is
-claimed only when the working tree wins at least nine tenths of the pairs and
-the medians differ by more than REV's quartile distance.
+for neither side); the relative change between the medians; and a verdict
+against the metric's `bound` in BENCHMARK.json:
+
+  within      the change is inside the bound (or an improvement);
+  over        the change is worse than the bound;
+  unresolved  REV's quartile distance over its median exceeds the bound, and
+              not every working-tree run beats every REV run: the runs spread
+              too widely to tell.
+
+Then each side's `failed` and `correct` per run. A gain is claimed only when
+the working tree wins at least nine tenths of the pairs and the medians differ
+by more than REV's quartile distance.
 """
 import argparse
 import json
@@ -44,6 +53,18 @@ def quartiles(xs):
         return xs[0], xs[0], xs[0]
     q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
     return q1, q2, q3
+
+
+def verdict(bs, cs, bound, lower):
+    """`within`, `over` or `unresolved` for base runs `bs`, change runs `cs`."""
+    bq, cq = quartiles(bs), quartiles(cs)
+    beats_all = max(cs) < min(bs) if lower else min(cs) > max(bs)
+    if bq[1] and (bq[2] - bq[0]) / abs(bq[1]) > bound and not beats_all:
+        return "unresolved"
+    worse = (cq[1] - bq[1]) if lower else (bq[1] - cq[1])
+    if worse > bound * abs(bq[1]):
+        return "over"
+    return "within"
 
 
 def main():
@@ -86,16 +107,19 @@ def main():
     print(f"\n{a.workload}: {a.rev} (base) vs working tree (change), "
           f"{len(pairs)} complete pairs of {len(a.seeds)}, seconds={seconds}")
     print(f"{'metric':<12} {'base q1/median/q3':>26} {'base iqr':>9} "
-          f"{'change q1/median/q3':>26} {'change iqr':>10} {'wins':>7}")
+          f"{'change q1/median/q3':>26} {'change iqr':>10} {'wins':>7} "
+          f"{'change':>8} {'bound':>6}  verdict")
     for m in metrics if pairs else []:
         name, lower = m["name"], m["better"] == "lower"
         bs = [b["metrics"][name]["value"] for b, _ in pairs]
         cs = [c["metrics"][name]["value"] for _, c in pairs]
         bq, cq = quartiles(bs), quartiles(cs)
         wins = sum(1 for b, c in zip(bs, cs) if (c < b if lower else c > b))
+        rel = (cq[1] - bq[1]) / abs(bq[1]) if bq[1] else 0.0
         print(f"{name:<12} {bq[0]:>8.4g}/{bq[1]:>8.4g}/{bq[2]:>8.4g} {bq[2] - bq[0]:>9.4g} "
               f"{cq[0]:>8.4g}/{cq[1]:>8.4g}/{cq[2]:>8.4g} {cq[2] - cq[0]:>10.4g} "
-              f"{wins:>3}/{len(pairs):<3}")
+              f"{wins:>3}/{len(pairs):<3} {rel:>+8.1%} {m['bound']:>6.2f}  "
+              f"{verdict(bs, cs, m['bound'], lower)}")
     for side in ("base", "change"):
         cells = ["run failed" if r is None else
                  f"{r['failed']}/{r['attempted']}{'' if r['correct'] else ' INCORRECT'}"

@@ -84,9 +84,11 @@ object Bench {
       s""""n_queries":${results.size},"n_failed":${results.count(_._2 < 0)},"failed":$failed}"""
     println(line)
     // full artifact on disk: the stdout capture upstream is bounded and can
-    // truncate the per-query map, so persist the complete record too
+    // truncate the per-query map, so persist the complete record too; a
+    // filtered run gets its own file and never replaces the full record
+    val record = if (only.isEmpty) "bench_full.json" else "bench_subset.json"
     try {
-      val w = new java.io.PrintWriter("bench_full.json"); w.println(line); w.close()
+      val w = new java.io.PrintWriter(record); w.println(line); w.close()
     } catch { case _: Throwable => () }
     spark.stop()
   }

@@ -45,11 +45,14 @@ object FileStats {
       .withColumn("file", input_file_name())
       .groupBy("file")
       .agg(aggs.head, aggs.tail: _*)
-    // a manifest is only useful if it is small: files-per-table rows
-    stats.coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/$StatsDir")
+    // a manifest is only useful if it is small: files-per-table rows, so
+    // it is collected once, written from the collected rows and counted
+    // without reading the written manifest back
+    val rows = stats.collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), stats.schema)
+      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$dir/$StatsDir")
     invalidate(dir)
-    FileStats.stats(spark, dir).count()
+    rows.length.toLong
   }
 
   /** Cached manifest frames: a DataFrame pins its resolved schema + file

@@ -2,7 +2,8 @@ package graft.pipeline
 
 import graft.gold.{FraudSummary, Revenue}
 import graft.ml.FraudScore
-import graft.operators.{Bronze, Cleaning, Enrichment, MergeUpsert}
+import graft.operators.{Bronze, ChangeFeed, Cleaning, Enrichment, MergeUpsert}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +12,13 @@ import org.apache.spark.sql.functions._
   * as partitioned parquet layers with idempotent silver merges.
   * Ref: /root/reference/spark_jobs/ (bronze, silver, gold jobs) and
   * /root/reference/airflow/dags/ (layer scheduling).
+  *
+  * Every bronze and gold table is declared ONCE (`bronzeTables`,
+  * `goldTables`): its input, its build, its partition column, its sort and
+  * its post-write hook. The linear build ([[runBronze]], [[runGold]]), the
+  * DAG ([[stages]]), both incremental paths and the erasure purge are all
+  * derived from those declarations, so a layout change cannot reach one
+  * path and skip another.
   *
   * Layout and scale choices:
   *  - every layer partitioned by its date column (`partitionBy`) — the
@@ -22,25 +30,79 @@ import org.apache.spark.sql.functions._
   *    column (the reference Z-orders on (shipping_country, event_date) —
   *    same locality goal, parquet-native mechanism: row-group min/max
   *    pruning on the sorted column).
+  *
+  * Freshness: gold records the silver version it reflects in one marker
+  * file, `gold/_silver_version`, written after a full build and after each
+  * fully successful CDC refresh. Every silver-derived gold table is fresh
+  * after each CDC micro-batch: `revenue_daily` through the partitions the
+  * change feed touched, `fraud_scores` (whose per-customer features let one
+  * changed order move many scores) rebuilt whole from the new snapshot.
   */
 class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
+  import Medallion._
 
   private def path(layer: String, table: String) = s"$warehouseDir/$layer/$table"
 
-  // ---- bronze: raw + lineage, append-shaped, partitioned by event_date ----
+  /** The warehouse's filesystem: every layer lives under `warehouseDir`. */
+  private lazy val fs = new Path(warehouseDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  def runBronze(): Unit = {
-    Bronze.bronzeEvents(graft.Tables.events(spark, sfDir))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("event_date")
-      .parquet(path("bronze", "events"))
+  private val SilverOrders = "orders_enriched"
 
-    graft.Tables.orders(spark, sfDir)
-      .withColumn("order_date", col("o_orderdate").cast("date"))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("order_date")
-      .parquet(path("bronze", "orders"))
+  // ---- table declarations: every bronze and gold write derives from these ----
+
+  /** Raw + lineage, append-shaped, partitioned by date. */
+  private val bronzeTables = Seq(
+    Table("bronze", "events", FromSource(() => graft.Tables.events(spark, sfDir)),
+      Bronze.bronzeEvents, Some("event_date"), subjectKey = Some("user_id")),
+    Table("bronze", "orders", FromSource(() => graft.Tables.orders(spark, sfDir)),
+      _.withColumn("order_date", col("o_orderdate").cast("date")), Some("order_date"),
+      subjectKey = Some("o_custkey")))
+
+  /** Aggregates and scores, sorted within partitions on the filter axis. */
+  private val goldTables = Seq(
+    Table("gold", "revenue_daily", FromSilver, Revenue.revenueDaily, Some("order_date")),
+    // data-skipping manifest on the sorted axis of the unpartitioned
+    // scores table (the partitioned tables prune by directory already)
+    Table("gold", "fraud_scores", FromSilver,
+      s => FraudScore.score(FraudScore.featureVector(s)), sortCol = Some("risk_label"),
+      subjectKey = Some("o_custkey"),
+      afterWrite = dir => FileStats.collect(spark, dir, Seq("risk_label", "fraud_score"))),
+    Table("gold", "user_risk_scores", FromEvents, FraudSummary.userRiskScores,
+      subjectKey = Some("user_id")),
+    Table("gold", "fraud_summary", FromEvents, FraudSummary.fraudSummaryDaily,
+      Some("event_date")))
+
+  /** `t`'s input, with `silver` standing for the pinned snapshot. */
+  private def input(t: Table, silver: => DataFrame): DataFrame = t.input match {
+    case FromSource(read) => read()
+    case FromSilver => silver
+    case FromEvents => eventsForGold
   }
+
+  /** Build `t` from `in` and write it: the whole table or, given `dates`,
+    * only those partitions, built from `in` filtered to them. A partial
+    * write is a per-write dynamic partition overwrite (the Spark conf is
+    * never touched): it replaces the partitions the build has rows for,
+    * and a date it has no row for — every order moved off it — is deleted
+    * instead of left stale. A replaced partition holds only files this
+    * write named, so a date whose file listing is unchanged by the write
+    * got no rows; finding it costs two listings, no Spark job. */
+  private def write(t: Table, in: DataFrame, dates: Option[Seq[String]] = None): Unit = {
+    val dir = new Path(path(t.layer, t.name))
+    def partition(d: String) = new Path(dir, s"${t.partitionCol.get}=$d")
+    def files(d: String): Set[String] =
+      if (fs.exists(partition(d))) fs.listStatus(partition(d)).map(_.getPath.getName).toSet
+      else Set.empty
+    val before = dates.toSeq.flatten.map(d => d -> files(d)).filter(_._2.nonEmpty)
+    val built = t.build(dates.fold(in)(ds => in.filter(col(t.partitionCol.get).isin(ds: _*))))
+    val w = t.sortCol.fold(built)(built.sortWithinPartitions(_)).write.mode(SaveMode.Overwrite)
+    val scoped = if (dates.isDefined) w.option("partitionOverwriteMode", "dynamic") else w
+    t.partitionCol.fold(scoped)(scoped.partitionBy(_)).parquet(dir.toString)
+    for ((d, old) <- before if files(d) == old) fs.delete(partition(d), true)
+    t.afterWrite(dir.toString)
+  }
+
+  def runBronze(): Unit = bronzeTables.foreach(t => write(t, input(t, readSilver(SilverOrders))))
 
   // ---- silver: cleaned + enriched, MERGE-idempotent ----
 
@@ -58,7 +120,7 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       graft.Tables.nation(spark, sfDir),
       graft.Tables.region(spark, sfDir))
 
-    upsertSilver("orders_enriched", enriched, Seq("o_orderkey"), "order_date")
+    upsertSilver(SilverOrders, enriched, Seq("o_orderkey"), "order_date")
   }
 
   /** MERGE-upsert `updates` into a versioned silver table (created on the
@@ -106,9 +168,7 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
   /** Atomically claim `version` of `table` or throw
     * [[Medallion.ConcurrentWriteException]] if another writer holds it. */
   private def claimVersion(table: String, version: Long): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(
-      path("silver", table), s"_commits/v=$version")
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val marker = new Path(path("silver", table), s"_commits/v=$version")
     try fs.create(marker, /* overwrite = */ false).close()
     catch {
       case _: java.io.IOException =>
@@ -126,15 +186,14 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     * contract as Delta vacuum. Returns the deleted versions. */
   def vacuumSilver(table: String, keep: Int = 7): Seq[Long] = {
     require(keep >= 1, "vacuum must keep at least the current version")
-    val dir = new org.apache.hadoop.fs.Path(path("silver", table))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(path("silver", table))
     if (!fs.exists(dir)) return Seq.empty
     val versions = fs.listStatus(dir).map(_.getPath.getName)
       .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).sorted
     val doomed = versions.dropRight(keep)
     doomed.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"v=$v"), true)
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"_commits/v=$v"), false)
+      fs.delete(new Path(dir, s"v=$v"), true)
+      fs.delete(new Path(dir, s"_commits/v=$v"), false)
     }
     doomed.toSeq
   }
@@ -150,12 +209,11 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
   /** Every COMMITTED silver version of `table` (carrying the _SUCCESS
     * visibility marker), ascending. */
   def committedVersions(table: String): Seq[Long] = {
-    val dir = new org.apache.hadoop.fs.Path(path("silver", table))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(path("silver", table))
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).map(_.getPath)
       .filter(_.getName.startsWith("v="))
-      .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
+      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
       .map(_.getName.stripPrefix("v=").toLong).sorted.toSeq
   }
 
@@ -177,12 +235,9 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     * Throws if no version was visible yet (same contract as Delta's
     * timestampAsOf before the first commit). */
   def readSilverAsOf(table: String, tsMillis: Long): DataFrame = {
-    val dir = new org.apache.hadoop.fs.Path(path("silver", table))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val dir = new Path(path("silver", table))
     val visible = committedVersions(table).filter { v =>
-      DeletionVectors.commitTimeMillis(fs,
-          new org.apache.hadoop.fs.Path(dir, s"v=$v"))
-        .exists(_ <= tsMillis)
+      DeletionVectors.commitTimeMillis(fs, new Path(dir, s"v=$v")).exists(_ <= tsMillis)
     }
     require(visible.nonEmpty,
       s"no committed version of silver $table at or before $tsMillis")
@@ -200,7 +255,7 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       readSilverVersion(table, fromVersion),
       readSilverVersion(table, toVersion), keys, attrs)
 
-  // ---- gold: aggregates, sorted-within-partition on the filter axis ----
+  // ---- gold ----
 
   /** Gold's view of events: the BRONZE layer read through its deletion
     * vectors — NOT the raw source. The layering rule that makes erasure
@@ -213,30 +268,31 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     DeletionVectors.read(spark, path("bronze", "events"))
       .withColumn("ts", col("event_date").cast("timestamp"))
 
+  /** Every gold table, rebuilt whole from the latest silver snapshot and
+    * bronze events; then the gold marker names that snapshot. */
   def runGold(): Unit = {
-    val silver = readSilver("orders_enriched")
-    Revenue.revenueDaily(silver)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("order_date")
-      .parquet(path("gold", "revenue_daily"))
-
-    FraudScore.score(FraudScore.featureVector(silver))
-      .sortWithinPartitions("risk_label")
-      .write.mode(SaveMode.Overwrite).parquet(path("gold", "fraud_scores"))
-
-    FraudSummary.userRiskScores(eventsForGold)
-      .write.mode(SaveMode.Overwrite).parquet(path("gold", "user_risk_scores"))
-
-    FraudSummary.fraudSummaryDaily(eventsForGold)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("event_date")
-      .parquet(path("gold", "fraud_summary"))
-
-    // data-skipping manifest on the sorted axis of the unpartitioned
-    // scores table (the partitioned tables prune by directory already)
-    FileStats.collect(spark, path("gold", "fraud_scores"),
-      Seq("risk_label", "fraud_score"))
+    val version = latest(SilverOrders)
+    val silver = readSilverVersion(SilverOrders, version)
+    goldTables.foreach(t => write(t, input(t, silver)))
+    markGold(version)
   }
+
+  private def goldMarker = new Path(path("gold", "_silver_version"))
+
+  /** Record that every silver-derived gold table reflects silver `version`.
+    * A crash mid-write leaves the new marker or an empty one, which reads
+    * as none: the next batch then rebuilds gold whole. */
+  private def markGold(version: Long): Unit = {
+    val out = fs.create(goldMarker, true)
+    try out.writeBytes(version.toString) finally out.close()
+  }
+
+  /** The silver version gold last fully reflected: the marker's, if it
+    * exists, parses, and names a version still committed (not vacuumed). */
+  private def goldVersion: Option[Long] = scala.util.Try {
+    val in = fs.open(goldMarker)
+    try new String(in.readAllBytes(), "UTF-8").trim.toLong finally in.close()
+  }.toOption.filter(committedVersions(SilverOrders).contains)
 
   /** Manifest-planned range read of a gold table (see FileStats): only
     * files whose [min,max] on `column` intersects [lo,hi] reach the scan.
@@ -246,92 +302,91 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     DeletionVectors.applyVectors(spark, path("gold", table),
       FileStats.readRange(spark, path("gold", table), column, lo, hi)._1)
 
-  /** Incremental gold maintenance: recompute date-partitioned gold tables
-    * ONLY for the given dates and overwrite just those partitions (dynamic
-    * partition overwrite). The daily-scheduled path at 100 TB — a
-    * late-arriving slice re-aggregates its partitions, never the full
-    * history. */
+  /** Incremental gold maintenance: recompute the date-partitioned gold
+    * tables ONLY for the given dates and overwrite just those partitions.
+    * The daily-scheduled path at 100 TB — a late-arriving slice
+    * re-aggregates its partitions, never the full history. */
   def runGoldIncremental(dates: Seq[String]): Unit = {
-    refreshRevenueDaily(dates)
-    overwritePartitions(FraudSummary.fraudSummaryDaily(
-        eventsForGold.filter(col("event_date").isin(dates: _*))), // partition-pruned
-      "fraud_summary", "event_date", dates)
+    lazy val silver = readSilver(SilverOrders)
+    goldTables.filter(_.partitionCol.isDefined)
+      .foreach(t => write(t, input(t, silver), Some(dates)))
   }
 
-  /** Re-aggregate revenue_daily for `dates` from the latest silver. */
-  private def refreshRevenueDaily(dates: Seq[String]): Unit =
-    overwritePartitions(Revenue.revenueDaily(readSilver("orders_enriched")
-        .filter(col("order_date").isin(dates: _*))),
-      "revenue_daily", "order_date", dates)
-
-  /** Make gold `table`'s `partitionCol` partitions for `dates` hold
-    * exactly `df`: a per-write dynamic partition overwrite (the session
-    * conf is never touched) replaces the partitions `df` has rows for, and
-    * a date `df` has no row for — every order moved off it — is deleted
-    * instead of left stale. A replaced partition holds only files this
-    * write named, so a date whose file listing is unchanged by the write
-    * got no rows; finding it costs two listings, no Spark job. */
-  private def overwritePartitions(df: DataFrame, table: String, partitionCol: String,
-                                  dates: Seq[String]): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(path("gold", table))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def files(d: String): Set[String] = {
-      val p = new org.apache.hadoop.fs.Path(dir, s"$partitionCol=$d")
-      if (fs.exists(p)) fs.listStatus(p).map(_.getPath.getName).toSet else Set.empty
-    }
-    val before = dates.map(d => d -> files(d)).filter(_._2.nonEmpty)
-    df.write.mode(SaveMode.Overwrite).option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(path("gold", table))
-    for ((d, old) <- before if files(d) == old)
-      fs.delete(new org.apache.hadoop.fs.Path(dir, s"$partitionCol=$d"), true)
-  }
-
-  /** CDC-driven gold maintenance — the closed loop silverChanges was built
-    * to feed: diff two silver snapshots, project the AFFECTED date
-    * partitions out of the feed (a delete or date-move refreshes the OLD
-    * date, an insert the NEW — both sides of the feed contribute), and
-    * refresh exactly those partitions of the SILVER-derived gold table,
-    * revenue_daily. fraud_summary derives from bronze events, which an
-    * orders change feed cannot change, so it is left alone. The driver
-    * collects DATES (partition grain, like manifest planning), never rows;
-    * everything row-shaped stays distributed. Returns the refreshed dates
-    * — empty feed, no gold I/O at all. */
+  /** CDC-driven gold maintenance: bring every silver-derived gold table
+    * from snapshot `fromVersion` to `toVersion`, by one rule per layout:
+    *  - a partitioned table (revenue_daily) overwrites only the partitions
+    *    the change feed touched — both sides of the feed contribute, so a
+    *    delete or date-move refreshes the OLD date and an insert the NEW;
+    *  - an unpartitioned table (fraud_scores) is rebuilt whole from the new
+    *    snapshot, on its own thread from the moment the feed starts, since
+    *    one changed order moves its customer's window features and so the
+    *    scores of all that customer's orders.
+    * Event-derived gold (fraud_summary, user_risk_scores) is left alone:
+    * an orders feed cannot change it. Only DATES are collected (partition
+    * grain, like manifest planning), never rows. Once every table has
+    * succeeded the gold marker names `toVersion`. Returns the refreshed
+    * dates; a `(v, v)` call returns none and does no gold I/O at all. */
   def runGoldIncrementalFromChanges(fromVersion: Long, toVersion: Long,
       attrs: Seq[String] = Seq("o_totalprice", "status_normalized"))
-      : Seq[String] = {
-    val feed = silverChanges("orders_enriched", fromVersion, toVersion,
-      Seq("o_orderkey"), attrs :+ "order_date")
-    val dates = feed
-      .select(explode(array(col("order_date_old").cast("string"),
-        col("order_date_new").cast("string"))).as("d"))
-      .filter(col("d").isNotNull)
-      .distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
-    if (dates.nonEmpty) refreshRevenueDaily(dates)
+      : Seq[String] = if (fromVersion == toVersion) Nil else {
+    val next = readSilverVersion(SilverOrders, toVersion)
+    val (partitioned, whole) = goldTables.filter(_.input == FromSilver)
+      .partition(_.partitionCol.isDefined)
+    val dates = alongside(whole.foreach(write(_, next))) {
+      val feed = ChangeFeed.changes(readSilverVersion(SilverOrders, fromVersion), next,
+        Seq("o_orderkey"), (attrs ++ partitioned.flatMap(_.partitionCol)).distinct)
+      partitioned.flatMap { t =>
+        val c = t.partitionCol.get
+        val ds = feed
+          .select(explode(array(col(s"${c}_old").cast("string"),
+            col(s"${c}_new").cast("string"))).as("d"))
+          .filter(col("d").isNotNull)
+          .distinct()
+          .collect().map(_.getString(0)).toSeq.sorted
+        if (ds.nonEmpty) write(t, next, Some(ds))
+        ds
+      }.distinct.sorted
+    }
+    markGold(toVersion)
     dates
+  }
+
+  /** Run `side` on a thread of its own (which inherits this thread's Spark
+    * local properties) while `main` runs on this one; return `main`'s
+    * result once both have succeeded. */
+  private def alongside[A](side: => Unit)(main: => A): A = {
+    val task = new java.util.concurrent.FutureTask[Unit](() => side)
+    new Thread(task, "graft-gold-rebuild").start()
+    val a = try main catch { case e: Throwable => scala.util.Try(task.get()); throw e }
+    try task.get() catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+    a
   }
 
   def runAll(): Unit = { runBronze(); runSilver(); runGold() }
 
   /** The streaming lakehouse loop closed end-to-end: every micro-batch of
-    * order updates MERGE-commits a new silver version and then refreshes
-    * ONLY the partitions of silver-derived gold (revenue_daily) its change
-    * feed touched. Event-derived gold (fraud_summary) is left alone: an
-    * orders batch cannot change it. This is streaming ingestion driving
-    * CDC-incremental gold, which is the reference's operating mode
-    * (Kafka → Delta MERGE → scheduled gold refresh) with the scheduler
-    * removed: gold staleness is one micro-batch, and the
-    * per-batch gold cost is proportional to the dates the batch touched,
-    * never to history.
+    * order updates MERGE-commits a new silver version and then brings
+    * silver-derived gold to it through [[runGoldIncrementalFromChanges]]:
+    * revenue_daily's touched partitions, and fraud_scores rebuilt whole,
+    * so every gold table is fresh after each batch. Event-derived gold is
+    * left alone: an orders batch cannot change it. This is streaming
+    * ingestion driving CDC-incremental gold, which is the reference's
+    * operating mode (Kafka → Delta MERGE → scheduled gold refresh) with
+    * the scheduler removed: gold staleness is one micro-batch.
     *
-    * Empty triggers commit nothing (no empty snapshot, no gold I/O).
-    * Checkpoint replay re-merges a batch onto a snapshot that already
-    * contains it — the diff is empty, so the replayed gold refresh is a
-    * no-op: effectively exactly-once end to end. Micro-batches are
-    * serial within a query, so the optimistic claim never conflicts with
-    * itself; a concurrent BATCH writer to the same table surfaces as
-    * ConcurrentWriteException and fails the query rather than losing
-    * either write. */
+    * The refresh diffs from the version the gold MARKER names, not from
+    * the silver version before the upsert. So a batch that crashed after
+    * its silver commit but before its refresh finished is made whole by
+    * its replay: the replay's diff still spans the crashed batch's change.
+    * A gold without a marker is rebuilt whole ([[runGold]]). Empty
+    * triggers commit nothing (no empty snapshot, no gold I/O), and a
+    * replay of a batch that did finish re-merges onto a snapshot that
+    * already contains it and changes no gold row: effectively
+    * exactly-once end to end, across a crash between commit and refresh.
+    * Micro-batches are serial within a query, so the optimistic claim
+    * never conflicts with itself; a concurrent BATCH writer to the same
+    * table surfaces as ConcurrentWriteException and fails the query
+    * rather than losing either write. */
   def streamingGoldMaintenance(updates: DataFrame, keys: Seq[String],
       tiebreak: Seq[String], checkpointDir: String,
       attrs: Seq[String] = Seq("o_totalprice", "status_normalized"))
@@ -340,12 +395,10 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         if (!batch.isEmpty) {
-          val src = graft.operators.Cleaning.deterministicDedup(
-            batch.toDF(), keys, tiebreak)
-          val prev = latestVersion("orders_enriched")
-          val next = upsertSilver("orders_enriched", src, keys, "order_date")
-          prev match {
-            case Some(p) => runGoldIncrementalFromChanges(p, next, attrs)
+          val src = Cleaning.deterministicDedup(batch.toDF(), keys, tiebreak)
+          val next = upsertSilver(SilverOrders, src, keys, "order_date")
+          goldVersion match {
+            case Some(g) => runGoldIncrementalFromChanges(g, next, attrs)
             case None => runGold()
           }
         }
@@ -353,73 +406,42 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       }
       .start()
 
-  private def hasSuccess(layer: String, table: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(path(layer, table), "_SUCCESS")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
   /** The medallion pipeline as a dependency DAG (the reference's Airflow
-    * shape, airflow/dags): bronze branches are independent and run in
-    * parallel; silver waits only on its bronze input; the four gold tables
-    * fan out in parallel once their inputs exist. Idempotency probes:
-    * bronze stages skip when their _SUCCESS commit marker exists (a re-run
-    * of the same interval — Airflow's "already succeeded" short-circuit);
-    * silver always runs because the MERGE upsert is idempotent by
-    * construction; gold always runs because it must reflect the latest
-    * silver version. */
+    * shape, airflow/dags), one stage per declared table: bronze branches
+    * are independent and run in parallel; silver waits only on its bronze
+    * input; the gold tables fan out in parallel once their inputs exist,
+    * the silver-derived ones on ONE snapshot, pinned when the first of
+    * them starts. Idempotency probes: bronze stages skip when their
+    * _SUCCESS commit marker exists (a re-run of the same interval —
+    * Airflow's "already succeeded" short-circuit); silver always runs
+    * because the MERGE upsert is idempotent by construction; gold always
+    * runs because it must reflect the latest silver version. */
   def stages(): Seq[Orchestrator.Stage] = {
     import Orchestrator.Stage
-    Seq(
-      Stage("bronze_events", Nil,
-        () => Bronze.bronzeEvents(graft.Tables.events(spark, sfDir))
-          .write.mode(SaveMode.Overwrite).partitionBy("event_date")
-          .parquet(path("bronze", "events")),
-        done = () => hasSuccess("bronze", "events")),
-      Stage("bronze_orders", Nil,
-        () => graft.Tables.orders(spark, sfDir)
-          .withColumn("order_date", col("o_orderdate").cast("date"))
-          .write.mode(SaveMode.Overwrite).partitionBy("order_date")
-          .parquet(path("bronze", "orders")),
-        done = () => hasSuccess("bronze", "orders")),
-      Stage("silver_orders", Seq("bronze_orders"), () => runSilver()),
-      Stage("gold_revenue_daily", Seq("silver_orders"),
-        () => Revenue.revenueDaily(readSilver("orders_enriched"))
-          .write.mode(SaveMode.Overwrite).partitionBy("order_date")
-          .parquet(path("gold", "revenue_daily"))),
-      Stage("gold_fraud_scores", Seq("silver_orders"),
-        () => {
-          FraudScore.score(FraudScore.featureVector(readSilver("orders_enriched")))
-            .sortWithinPartitions("risk_label")
-            .write.mode(SaveMode.Overwrite).parquet(path("gold", "fraud_scores"))
-          FileStats.collect(spark, path("gold", "fraud_scores"),
-            Seq("risk_label", "fraud_score"))
-          ()
-        }),
-      Stage("gold_user_risk_scores", Seq("bronze_events"),
-        () => FraudSummary.userRiskScores(eventsForGold)
-          .write.mode(SaveMode.Overwrite).parquet(path("gold", "user_risk_scores"))),
-      Stage("gold_fraud_summary", Seq("bronze_events"),
-        () => FraudSummary.fraudSummaryDaily(eventsForGold)
-          .write.mode(SaveMode.Overwrite).partitionBy("event_date")
-          .parquet(path("gold", "fraud_summary"))),
+    lazy val version = latest(SilverOrders)
+    lazy val silver = readSilverVersion(SilverOrders, version)
+    def build(t: Table) = () => write(t, input(t, silver))
+    bronzeTables.map(t => Stage(t.stage, Nil, build(t),
+      done = () => fs.exists(new Path(path(t.layer, t.name), "_SUCCESS")))) ++
+      Seq(Stage("silver_orders", Seq("bronze_orders"), () => runSilver())) ++
+      goldTables.map(t => Stage(t.stage, t.input.deps, build(t))) :+
       // the DAG-terminal quality gate (the reference's dbt-test / DQ
       // Airflow tasks): validate the MATERIALIZED warehouse, fail the run
       // — not just a report row — when a check breaks. One fused
       // aggregation per table (Constraints.enforce), released right after.
-      Stage("dq_gate",
-        Seq("gold_revenue_daily", "gold_fraud_scores",
-          "gold_user_risk_scores", "gold_fraud_summary"),
-        () => {
-          // validate (no persist): these tables are already materialized;
-          // there is no write to keep consistent with
-          graft.operators.Constraints.validate(readSilver("orders_enriched"), Seq(
-            "silver_orderkey_not_null" -> col("o_orderkey").isNotNull,
-            "silver_amount_positive" -> (col("o_totalprice") > 0)))
-          graft.operators.Constraints.validate(readGold("revenue_daily"), Seq(
-            "gold_gmv_nonneg" -> (col("gmv") >= 0),
-            "gold_orders_positive" -> (col("total_orders") > 0),
-            "gold_fraud_bounded" -> (col("fraud_orders") <= col("total_orders"))))
-        }))
+      Stage("dq_gate", goldTables.map(_.stage), () => {
+        // every gold stage succeeded: gold reflects the pinned snapshot
+        markGold(version)
+        // validate (no persist): these tables are already materialized;
+        // there is no write to keep consistent with
+        graft.operators.Constraints.validate(silver, Seq(
+          "silver_orderkey_not_null" -> col("o_orderkey").isNotNull,
+          "silver_amount_positive" -> (col("o_totalprice") > 0)))
+        graft.operators.Constraints.validate(readGold("revenue_daily"), Seq(
+          "gold_gmv_nonneg" -> (col("gmv") >= 0),
+          "gold_orders_positive" -> (col("total_orders") > 0),
+          "gold_fraud_bounded" -> (col("fraud_orders") <= col("total_orders"))))
+      })
   }
 
   /** runAll through the DAG: independent branches in parallel, per-stage
@@ -432,6 +454,28 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     DeletionVectors.read(spark, path("gold", table))
 
   // ---- GDPR right-to-be-forgotten (Art. 17) -------------------------------
+
+  /** One row of the erasure topology: a subject-keyed table scope with
+    * its key column, its partition layout and the hook its table runs
+    * after a rewrite of its files. */
+  private case class SubjectScope(layer: String, table: String,
+                                  scope: String, keyCol: String,
+                                  partitionCols: Seq[String],
+                                  afterWrite: String => Unit = _ => ())
+
+  /** The erasure topology — ONE list drives both [[forgetCustomer]] and
+    * [[completeErasure]], so the GDPR coverage surface (which tables hold
+    * the subject, under which key, in which layout) cannot drift between
+    * the logical erase and the physical purge. Bronze and gold scopes come
+    * from the table declarations' `subjectKey`. */
+  private def subjectScopes(): Seq[SubjectScope] = {
+    def scopes(ts: Seq[Table]) = ts.flatMap(t => t.subjectKey.map(k =>
+      SubjectScope(t.layer, t.name, "", k, t.partitionCol.toSeq, t.afterWrite)))
+    scopes(bronzeTables) ++
+      committedVersions(SilverOrders).map(v =>
+        SubjectScope("silver", SilverOrders, s"/v=$v", "o_custkey", Seq("order_date"))) ++
+      scopes(goldTables)
+  }
 
   /** Erase data subject `key` across the lakehouse: tombstone every row
     * keyed to the subject in every layer — bronze orders (o_custkey) and
@@ -454,34 +498,11 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     * Scale shape: each erase is ONE distributed scan column-pruned to
     * the key column, writing positions sized by the subject's rows; no
     * table rewrite, nothing row-shaped at the driver. */
-  /** One row of the erasure topology: a subject-keyed table scope with
-    * its key column and partition layout. */
-  private case class SubjectScope(layer: String, table: String,
-                                  scope: String, keyCol: String,
-                                  partitionCols: Seq[String])
-
-  /** The erasure topology — ONE list drives both [[forgetCustomer]] and
-    * [[completeErasure]], so the GDPR coverage surface (which tables hold
-    * the subject, under which key, in which layout) cannot drift between
-    * the logical erase and the physical purge. Extend HERE when a new
-    * subject-grain table joins a layer. */
-  private def subjectScopes(): Seq[SubjectScope] =
-    Seq(
-      SubjectScope("bronze", "orders", "", "o_custkey", Seq("order_date")),
-      SubjectScope("bronze", "events", "", "user_id", Seq("event_date"))) ++
-      committedVersions("orders_enriched").map(v =>
-        SubjectScope("silver", "orders_enriched", s"/v=$v", "o_custkey",
-          Seq("order_date"))) ++
-      Seq(
-        SubjectScope("gold", "fraud_scores", "", "o_custkey", Nil),
-        SubjectScope("gold", "user_risk_scores", "", "user_id", Nil))
-
   def forgetCustomer(key: Long): DataFrame = {
     import spark.implicits._
     val rows = subjectScopes().flatMap { s =>
       val dir = path(s.layer, s.table) + s.scope
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val p = new Path(dir)
       if (!fs.exists(p)) None
       else Some((s.layer, s.table, s.scope, s.keyCol,
         DeletionVectors.delete(spark, dir, col(s.keyCol) === lit(key))))
@@ -491,12 +512,13 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
 
   /** Physical completion of logical erasures: every table directory
     * holding deletion vectors is rewritten without its tombstones
-    * (partition layout preserved) and its vectors cleared; the
-    * fraud_scores data-skipping manifest is re-collected over the
-    * rewritten files. Returns (layer, table, scope, surviving_rows) for
-    * each rewritten directory — vector-free directories are untouched,
-    * so the rewrite cost is proportional to the tables that actually
-    * carry erasures, run once per compliance window, not per request. */
+    * (partition layout preserved), its vectors cleared, and its table's
+    * post-write hook run again (fraud_scores re-collects its data-skipping
+    * manifest over the rewritten files). Returns (layer, table, scope,
+    * surviving_rows) for each rewritten directory — vector-free
+    * directories are untouched, so the rewrite cost is proportional to
+    * the tables that actually carry erasures, run once per compliance
+    * window, not per request. */
   def completeErasure(): DataFrame = {
     import spark.implicits._
     val rows = subjectScopes().flatMap { s =>
@@ -504,9 +526,7 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       if (!DeletionVectors.hasVectors(spark, dir)) None
       else {
         val survivors = DeletionVectors.materialize(spark, dir, s.partitionCols)
-        // the rewrite invalidated fraud_scores' data-skipping manifest
-        if (s.table == "fraud_scores")
-          FileStats.collect(spark, dir, Seq("risk_label", "fraud_score"))
+        s.afterWrite(dir)
         Some((s.layer, s.table, s.scope, survivors))
       }
     }
@@ -514,12 +534,34 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
   }
 
   /** Latest silver snapshot. */
-  def readSilver(table: String): DataFrame =
-    readSilverVersion(table, latestVersion(table).getOrElse(
-      throw new IllegalStateException(s"no silver versions for $table")))
+  def readSilver(table: String): DataFrame = readSilverVersion(table, latest(table))
+
+  private def latest(table: String): Long = latestVersion(table).getOrElse(
+    throw new IllegalStateException(s"no silver versions for $table"))
 }
 
 object Medallion {
+  /** Where a declared table's rows come from; `deps` are the DAG stages
+    * that must have run before it is built. */
+  private sealed abstract class Input(val deps: Seq[String])
+  /** A source table of the scale-factor directory. */
+  private final case class FromSource(read: () => DataFrame) extends Input(Nil)
+  /** One pinned snapshot of silver orders. */
+  private case object FromSilver extends Input(Seq("silver_orders"))
+  /** Bronze events read through their deletion vectors. */
+  private case object FromEvents extends Input(Seq("bronze_events"))
+
+  /** One bronze or gold table: its input, its build, its layout (partition
+    * column, sort within files), the key of the data subject its rows
+    * carry (its erasure scope), and a hook run on its directory after
+    * every write of its files. */
+  private final case class Table(layer: String, name: String, input: Input,
+      build: DataFrame => DataFrame, partitionCol: Option[String] = None,
+      sortCol: Option[String] = None, subjectKey: Option[String] = None,
+      afterWrite: String => Unit = _ => ()) {
+    def stage: String = s"${layer}_$name"
+  }
+
   /** Optimistic-concurrency conflict: another writer committed (or is
     * committing) the version this writer computed against stale inputs.
     * The Delta ConcurrentAppendException analog — callers re-read the

@@ -109,21 +109,6 @@ class MedallionSpec extends SparkSpec {
     (m, v1, v2, expectedDates, wh)
   }
 
-  /** revenue_daily as stored equals the full recompute from latest silver. */
-  private def assertRevenueMatchesRecompute(m: Medallion): Unit = {
-    val dims = Seq("order_date", "region_name", "status_normalized", "amount_tier")
-    val fullDf = graft.gold.Revenue.revenueDaily(
-      m.readSilver("orders_enriched").drop("_merge_action"))
-    val full = fullDf.orderBy(dims.head, dims.tail: _*).collect().toSeq
-    // the partitioned read appends order_date last; realign to the
-    // recompute's column order before comparing rows
-    val cols = fullDf.columns.toSeq
-    val after = m.readGold("revenue_daily")
-      .select(cols.head, cols.tail: _*)
-      .orderBy(dims.head, dims.tail: _*).collect().toSeq
-    assert(after == full, "incremental gold diverged from the full recompute")
-  }
-
   /** Relative paths of the parquet data files under `dir`. */
   private def dataFiles(dir: String): Set[String] = {
     val root = java.nio.file.Paths.get(dir)
@@ -135,16 +120,42 @@ class MedallionSpec extends SparkSpec {
     finally s.close()
   }
 
+  /** Every gold table as stored equals its full recompute from the latest
+    * silver snapshot and bronze events, as multisets of rows. */
+  private def assertGoldMatchesRecompute(m: Medallion, wh: String): Unit = {
+    import graft.gold.{FraudSummary, Revenue}
+    import graft.ml.FraudScore
+    val silver = m.readSilver("orders_enriched")
+    val events = spark.read.parquet(s"$wh/bronze/events")
+      .withColumn("ts", col("event_date").cast("timestamp"))
+    val want = Map(
+      "revenue_daily" -> Revenue.revenueDaily(silver),
+      "fraud_scores" -> FraudScore.score(FraudScore.featureVector(silver)),
+      "user_risk_scores" -> FraudSummary.userRiskScores(events),
+      "fraud_summary" -> FraudSummary.fraudSummaryDaily(events))
+    for ((table, full) <- want) {
+      val cols = full.columns.toSeq
+      val got = m.readGold(table).select(cols.head, cols.tail: _*)
+      val stale = got.exceptAll(full).count()
+      val missing = full.exceptAll(got).count()
+      assert(stale == 0 && missing == 0,
+        s"$table: $stale stored rows not in the recompute, $missing missing")
+    }
+  }
+
   test("CDC-driven incremental gold refreshes exactly the changed dates " +
     "and converges to the full recompute") {
     // touch a handful of orders on a known set of dates: double the price
-    val (m, v1, v2, expectedDates, _) = cdcFixture("graft_wh_cdc")((_, v) =>
+    val (m, v1, v2, expectedDates, wh) = cdcFixture("graft_wh_cdc")((_, v) =>
       v.withColumn("o_totalprice", col("o_totalprice") * 2))
     // gold is now stale for exactly those dates; the CDC loop must find
     // them from the feed alone and refresh only them
     val refreshed = m.runGoldIncrementalFromChanges(v1, v2)
     assert(refreshed == expectedDates, s"$refreshed != $expectedDates")
-    assertRevenueMatchesRecompute(m)
+    // every gold table, fraud_scores included: a doubled price moves the
+    // customer's window features, so the scores of all that customer's
+    // orders change, not only the 40
+    assertGoldMatchesRecompute(m, wh)
 
     // an empty diff (v2 vs v2) must do nothing
     assert(m.runGoldIncrementalFromChanges(v2, v2).isEmpty)
@@ -165,7 +176,71 @@ class MedallionSpec extends SparkSpec {
     assert(m.runGoldIncrementalFromChanges(v1, v2) == expectedDates)
     // an orders change feed cannot change event-derived gold
     assert(dataFiles(s"$wh/gold/fraud_summary") == before)
-    assertRevenueMatchesRecompute(m)
+    assertGoldMatchesRecompute(m, wh)
+  }
+
+  test("a micro-batch that crashes between its silver commit and its gold " +
+    "refresh is made whole by its replay") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_crash").toString
+    @volatile var crash = true
+    val m = new Medallion(spark, TinySf, wh) {
+      override def runGoldIncrementalFromChanges(fromVersion: Long, toVersion: Long,
+                                                 attrs: Seq[String]): Seq[String] =
+        if (crash) { crash = false; throw new IllegalStateException("crash before refresh") }
+        else super.runGoldIncrementalFromChanges(fromVersion, toVersion, attrs)
+    }
+    m.runAll()
+    val v1 = m.latestVersion("orders_enriched").get
+    val silver = m.readSilver("orders_enriched").drop("_merge_action")
+    val updDir = java.nio.file.Files.createTempDirectory("graft_crash_upd").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_crash_ckpt").toString
+    silver.orderBy("o_orderkey").limit(15)
+      .withColumn("o_totalprice", col("o_totalprice") * 2)
+      .write.mode("append").parquet(updDir)
+    def start() = m.streamingGoldMaintenance(
+      spark.readStream.schema(silver.schema).parquet(updDir),
+      Seq("o_orderkey"), Seq("o_totalprice"), ckpt)
+
+    val first = start()
+    try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      first.processAllAvailable())
+    finally first.stop()
+    // the batch committed silver v1 + 1, then crashed before its refresh
+    assert(m.latestVersion("orders_enriched").contains(v1 + 1))
+
+    val replay = start()
+    try replay.processAllAvailable() finally replay.stop()
+    assert(m.latestVersion("orders_enriched").contains(v1 + 2))
+    assertGoldMatchesRecompute(m, wh)
+  }
+
+  test("runAll and runAllOrchestrated build the same gold") {
+    def build(name: String)(run: Medallion => Unit): (Medallion, String) = {
+      val wh = java.nio.file.Files.createTempDirectory(name).toString
+      val m = new Medallion(spark, TinySf, wh)
+      run(m)
+      (m, wh)
+    }
+    val (linear, whL) = build("graft_wh_linear")(_.runAll())
+    val (dag, whD) = build("graft_wh_dag_same")(m =>
+      assert(m.runAllOrchestrated().forall(_.status == "success")))
+    for (t <- Seq("revenue_daily", "fraud_scores", "user_risk_scores", "fraud_summary")) {
+      def rows(m: Medallion) = {
+        val df = m.readGold(t)
+        df.orderBy(df.columns.map(col).toSeq: _*).collect().toSeq
+      }
+      assert(rows(linear) == rows(dag), s"$t differs")
+      // data files per table and partition directory
+      def layout(wh: String) = dataFiles(s"$wh/gold/$t").toSeq
+        .groupBy(f => Option(java.nio.file.Paths.get(f).getParent).map(_.toString))
+        .map { case (d, fs) => d -> fs.size }
+      assert(layout(whL) == layout(whD), s"$t file layout differs")
+    }
+    def marker(wh: String) =
+      new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(s"$wh/gold/_silver_version")), "UTF-8")
+    assert(marker(whL) == marker(whD))
+    assert(marker(whL) == linear.latestVersion("orders_enriched").get.toString)
   }
 
   test("repeated CDC upserts do not fragment silver: no version has more " +
