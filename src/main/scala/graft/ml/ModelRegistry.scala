@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.hadoop.fs.Path
+import graft.util.VersionedDir
 import org.apache.spark.ml.classification.GBTClassificationModel
 import org.apache.spark.ml.util.MLWritable
 import org.apache.spark.sql.SparkSession
@@ -11,75 +11,44 @@ import org.apache.spark.sql.SparkSession
   * /root/reference/ml/models/fraud_detector.py save/load,
   * /root/reference/ml/serving/api.py:58,280).
   *
-  * Layout mirrors the Medallion silver versioning (`<root>/models/<name>/
-  * v=N`): monotonically increasing versions, `latest` = max N, no version
-  * ever rewritten in place. Spark-ML writers persist model metadata +
-  * tree/coefficient data as parquet, so the registry works on any
-  * HDFS-compatible store — the same property Delta-backed registries rely
-  * on. A saved model is a few KB–MB (ensemble structure), never data-sized;
-  * "train nightly, score everywhere" ships only this artifact.
+  * Layout and commit protocol are [[graft.util.VersionedDir]]'s
+  * (`<root>/models/<name>/v=N`): monotonically increasing versions,
+  * `latest` = max committed N, no version ever rewritten in place. Spark-ML
+  * writers persist model metadata + tree/coefficient data as parquet, so
+  * the registry works on any HDFS-compatible store — the same property
+  * Delta-backed registries rely on. A saved model is a few KB–MB (ensemble
+  * structure), never data-sized; "train nightly, score everywhere" ships
+  * only this artifact.
   */
 object ModelRegistry {
 
-  private def dir(root: String, name: String) = s"$root/models/$name"
-  private val Committed = "_COMMITTED"
+  private def dir(spark: SparkSession, root: String, name: String) =
+    VersionedDir(spark, s"$root/models/$name")
 
   /** Persist `model` as the next version; returns the committed version.
-    *
-    * Publish is write-to-temp → rename → commit-marker: the Spark-ML
-    * writer lands the artifact in a hidden temp dir, the rename claims a
-    * version slot (bumping past slots a concurrent publisher claimed
-    * first), and the `_COMMITTED` marker — created only after the rename —
-    * is what makes the version VISIBLE. Readers (latestVersion/loadGbt)
-    * ignore unmarked dirs, so a hot-reloading scorer can never load a
-    * half-written artifact mid-save — the same _SUCCESS visibility rule
-    * Medallion applies to silver snapshots. The version scan + rename is
-    * driver-side file metadata; no data pass. */
+    * The artifact becomes VISIBLE only once fully written (the
+    * VersionedDir `_SUCCESS` rule), so a hot-reloading scorer can never
+    * load a half-written artifact mid-save. */
   def save(spark: SparkSession, model: MLWritable, root: String,
            name: String): Long =
     saveArtifact(spark, root, name)(tmp => model.write.overwrite().save(tmp))
 
   /** Versioned publish of ANY artifact a callback can write to a path
-    * (Spark-ML model, ANN codebooks, …) — same temp-write → rename →
-    * commit-marker protocol as the model path, so every registry entry
-    * gets the no-torn-reads visibility rule. */
+    * (Spark-ML model, ANN codebooks, …), in the first free version after
+    * the latest committed one: a slot a concurrent or crashed publisher
+    * already holds is skipped, so version sequences may have holes. The
+    * callback writes subdirectories of its path; the commit marker is
+    * created after it returns. A failed callback leaves no version. */
   def saveArtifact(spark: SparkSession, root: String, name: String)
-                  (write: String => Unit): Long = {
-    val base = new Path(dir(root, name))
-    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(base)
-    val tmp = new Path(base, s".tmp-${java.util.UUID.randomUUID()}")
-    write(tmp.toString)
-    var v = latestVersion(spark, root, name).getOrElse(0L) + 1L
-    var attempts = 0
-    while ({
-      val dest = new Path(base, s"v=$v")
-      val claimed = !fs.exists(dest) && fs.rename(tmp, dest)
-      if (claimed) {
-        // exclusive create: double-commit of the same slot fails loudly
-        fs.create(new Path(dest, Committed), false).close()
-      }
-      !claimed
-    }) {
-      v += 1; attempts += 1
-      require(attempts < 1000, s"could not claim a version slot under $base")
-    }
-    v
-  }
+                  (write: String => Unit): Long =
+    dir(spark, root, name).commitNext(write)
 
-  /** All COMMITTED versions, ascending — an in-flight save's dir
-    * (post-rename, pre-marker) or a crashed half-publish never lists, so
-    * version sequences seen by readers may be non-contiguous. */
+  /** All COMMITTED versions, ascending — an in-flight save or a crashed
+    * half-publish never lists, so version sequences seen by readers may be
+    * non-contiguous. */
   def committedVersions(spark: SparkSession, root: String,
-                        name: String): Seq[Long] = {
-    val p = new Path(dir(root, name))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).map(_.getPath).toSeq
-      .filter(_.getName.startsWith("v="))
-      .filter(d => fs.exists(new Path(d, Committed)))
-      .map(_.getName.stripPrefix("v=").toLong).sorted
-  }
+                        name: String): Seq[Long] =
+    dir(spark, root, name).committed
 
   def latestVersion(spark: SparkSession, root: String,
                     name: String): Option[Long] =
@@ -90,7 +59,7 @@ object ModelRegistry {
                   version: Option[Long] = None): String = {
     val v = version.orElse(latestVersion(spark, root, name)).getOrElse(
       throw new IllegalStateException(s"no saved versions of '$name' under $root"))
-    s"${dir(root, name)}/v=$v"
+    dir(spark, root, name).path(v).toString
   }
 
   /** Load a GBT model at `version` (default: latest) — the serving-side

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.util.VersionedDir
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions.col
   * (the same locality the medallion's Z-order/sort-within write gives —
   * compaction must not destroy it).
   *
-  * The rewrite lands in `dir_compact_tmp` and swaps in atomically-enough
-  * via two renames (crash between them leaves the original or the
-  * finished rewrite, never a mix; a real lakehouse would commit through a
+  * The rewrite is [[graft.util.VersionedDir.rewrite]]'s staged swap: a
+  * compacted snapshot keeps its commit instant, so timestamp time travel
+  * over it still resolves (a real lakehouse would commit through a
   * transaction log instead).
   */
 object Compaction {
@@ -39,13 +40,7 @@ object Compaction {
           .sortWithinPartitions(sortCols.map(col): _*)
       else df.repartition(nFiles)
 
-    val tmp = new Path(dir + "_compact_tmp")
-    val old = new Path(dir + "_compact_old")
-    packed.write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-    fs.delete(old, true)
-    if (!fs.rename(p, old)) throw new IllegalStateException(s"cannot stage $dir")
-    if (!fs.rename(tmp, p)) { fs.rename(old, p); throw new IllegalStateException(s"swap failed for $dir") }
-    fs.delete(old, true)
+    VersionedDir.rewrite(spark, dir)(packed.write.mode(SaveMode.Overwrite).parquet(_))
     fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.util.VersionedDir
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -34,40 +35,6 @@ import org.apache.spark.sql.functions._
 object DeletionVectors {
 
   val DvDir = "_graft_dv"
-
-  /** Marker preserving a snapshot's ORIGINAL commit instant across
-    * physical rewrites. [[materialize]] rewrites every file in the dir
-    * (including `_SUCCESS`, whose mtime would otherwise stand in for the
-    * commit time), so timestamp time travel over a purged table would see
-    * every pre-purge version "committed" at purge time and refuse
-    * pre-purge reads. The marker carries the first-visibility instant
-    * forward; readers prefer it over the `_SUCCESS` mtime. */
-  val CommitTsMarker = "_commit_ts"
-
-  /** The commit instant of the snapshot at `dir`: the `_commit_ts` marker
-    * if one was carried through a rewrite, else the `_SUCCESS` mtime (the
-    * original visibility moment), else None for uncommitted dirs. */
-  def commitTimeMillis(fs: org.apache.hadoop.fs.FileSystem,
-                       dir: Path): Option[Long] = {
-    val marker = new Path(dir, CommitTsMarker)
-    val success = new Path(dir, "_SUCCESS")
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    } else if (fs.exists(success))
-      Some(fs.getFileStatus(success).getModificationTime)
-    else None
-  }
-
-  private def writeCommitTs(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: Path, millis: Long): Unit = {
-    val out = fs.create(new Path(dir, CommitTsMarker), true)
-    try out.write(millis.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
 
   private def dvPath(dir: String) = s"$dir/$DvDir"
 
@@ -128,35 +95,16 @@ object DeletionVectors {
   /** Compaction of the merge-on-read debt: rewrite survivors, clear the
     * vectors. After this the table is vector-free and reads cost a plain
     * scan again — run when vectors grow past a few % of the table (the
-    * trigger Delta documents for PURGE). Staged write + swap, same as
-    * Compaction. Pass the table's partition columns so the rewrite
-    * preserves its directory layout (and its pruning axis). Returns the
-    * surviving row count. */
+    * trigger Delta documents for PURGE). The staged swap keeps the
+    * snapshot's commit instant ([[VersionedDir.rewrite]]), so timestamp
+    * time travel over a purged table still resolves. Pass the table's
+    * partition columns so the rewrite preserves its directory layout (and
+    * its pruning axis). Returns the surviving row count. */
   def materialize(spark: SparkSession, dir: String,
                   partitionCols: Seq[String] = Nil): Long = {
-    val p = new Path(dir)
-    // dot-prefixed staging dir: invisible to Spark readers AND to any
-    // sibling-name convention (a silver snapshot's staging dir must never
-    // match the `v=`-prefix version listing — "v=1__dv_rewrite" would
-    // crash latestVersion/vacuum, permanently if a crash strands it)
-    val tmp = new Path(p.getParent, "." + p.getName + "__dv_rewrite")
     val writer = read(spark, dir).write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(tmp.toString)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the rewrite must not move the snapshot's commit instant: carry the
-    // original commit time into the new dir as a _commit_ts marker (the
-    // fresh _SUCCESS's mtime is purge time, not commit time)
-    commitTimeMillis(fs, p).foreach(writeCommitTs(fs, tmp, _))
-    // swap with the OLD copy staged aside, not deleted first: a crash
-    // between the two renames leaves both copies on disk (old under the
-    // dot-staged name, new under the rewrite name) instead of leaving the
-    // table directory absent with its only copy stranded
-    val old = new Path(p.getParent, "." + p.getName + "__dv_old")
-    fs.delete(old, true) // clear a stranded prior attempt
-    require(fs.rename(p, old), s"could not stage $p aside for the swap")
-    require(fs.rename(tmp, p), s"could not publish the rewrite into $p")
-    fs.delete(old, true)
+    VersionedDir.rewrite(spark, dir)(
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer).parquet(_))
     spark.read.parquet(dir).count()
   }
 }

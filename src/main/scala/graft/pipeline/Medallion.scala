@@ -3,6 +3,7 @@ package graft.pipeline
 import graft.gold.{FraudSummary, Revenue}
 import graft.ml.FraudScore
 import graft.operators.{Bronze, ChangeFeed, Cleaning, Enrichment, MergeUpsert}
+import graft.util.VersionedDir
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -131,18 +132,13 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
     * v=N snapshot (Delta-style time travel without Delta); readers pin a
     * version for point-in-time correctness. Returns the committed version.
     *
-    * Concurrency: optimistic, Delta's commit-protocol shape. The MERGE is
-    * computed against the latest committed snapshot B; before writing,
-    * the writer atomically CLAIMS version B+1 (exclusive file create
-    * under `_commits/`). A second writer that also read B loses the
-    * claim and gets [[Medallion.ConcurrentWriteException]] — it must
-    * re-read and re-merge, because its inputs are stale (a MERGE on the
-    * same keys is never blind-retryable; Delta raises
-    * ConcurrentAppendException for the same reason). Without the claim,
-    * the race is a silent lost update: both writers compute v=B+1 and
-    * the second Overwrite erases the first. Atomicity rides on the
-    * filesystem's exclusive create (HDFS/local; an object store needs a
-    * coordinating LogStore, exactly as Delta documents). */
+    * Concurrency: optimistic. The MERGE is computed against the latest
+    * committed snapshot B and committed as exactly B+1 through the
+    * [[graft.util.VersionedDir]] protocol; a second writer that also read
+    * B loses the claim and gets [[Medallion.ConcurrentWriteException]]. It
+    * must re-read and re-merge, because its inputs are stale (a MERGE on
+    * the same keys is never blind-retryable). A write that fails releases
+    * B+1, so the next upsert can take it. */
   def upsertSilver(table: String, updates: DataFrame, keys: Seq[String],
                    partitionCol: String,
                    checks: Seq[(String, org.apache.spark.sql.Column)] = Nil): Long = {
@@ -157,91 +153,49 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
         readSilver(table).drop("_merge_action"), validated, keys)
       case None => validated.withColumn("_merge_action", lit("inserted"))
     }
-    val next = prev.getOrElse(0L) + 1
-    claimVersion(table, next)
-    try merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol)
-      .parquet(path("silver", table) + s"/v=$next")
+    try silverDir(table).commit(prev.getOrElse(0L) + 1)(
+      merged.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(_))
     finally if (checks.nonEmpty) validated.unpersist(blocking = false)
-    next
   }
 
-  /** Atomically claim `version` of `table` or throw
-    * [[Medallion.ConcurrentWriteException]] if another writer holds it. */
-  private def claimVersion(table: String, version: Long): Unit = {
-    val marker = new Path(path("silver", table), s"_commits/v=$version")
-    try fs.create(marker, /* overwrite = */ false).close()
-    catch {
-      case _: java.io.IOException =>
-        throw new Medallion.ConcurrentWriteException(
-          s"silver $table v=$version already claimed by a concurrent " +
-            "writer; re-read the latest snapshot and re-merge")
-    }
-  }
+  private def silverDir(table: String) = new VersionedDir(fs, new Path(path("silver", table)))
 
   /** Delta VACUUM analog (ref: delta_utils.py vacuum_delta_table — default
     * RETAIN 168 HOURS on daily runs ≈ keep the last 7 snapshots): drop all
-    * but the newest `keep` silver versions. The current version is never
-    * deletable (`keep >= 1` enforced), so readers of the latest snapshot
-    * are immune; pinned readers of older versions lose them — the same
-    * contract as Delta vacuum. Returns the deleted versions. */
-  def vacuumSilver(table: String, keep: Int = 7): Seq[Long] = {
-    require(keep >= 1, "vacuum must keep at least the current version")
-    val dir = new Path(path("silver", table))
-    if (!fs.exists(dir)) return Seq.empty
-    val versions = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong).sorted
-    val doomed = versions.dropRight(keep)
-    doomed.foreach { v =>
-      fs.delete(new Path(dir, s"v=$v"), true)
-      fs.delete(new Path(dir, s"_commits/v=$v"), false)
-    }
-    doomed.toSeq
-  }
+    * but the newest `keep` committed silver versions ([[VersionedDir.vacuum]]).
+    * The current version is never deletable (`keep >= 1` enforced), so
+    * readers of the latest snapshot are immune; pinned readers of older
+    * versions lose them — the same contract as Delta vacuum. Returns the
+    * deleted versions. */
+  def vacuumSilver(table: String, keep: Int = 7): Seq[Long] = silverDir(table).vacuum(keep)
 
-  /** Highest COMMITTED silver version, if any. A snapshot counts only
-    * when its directory carries Spark's _SUCCESS commit marker — a
-    * crashed half-written v=N must never be readable as latest (the
-    * poor-man's transaction-log visibility rule; Delta gets the same
-    * from its log). */
+  /** Highest COMMITTED silver version, if any: a crashed half-written v=N
+    * is never readable as latest ([[VersionedDir]]'s visibility rule). */
   def latestVersion(table: String): Option[Long] =
     committedVersions(table).lastOption
 
-  /** Every COMMITTED silver version of `table` (carrying the _SUCCESS
-    * visibility marker), ascending. */
-  def committedVersions(table: String): Seq[Long] = {
-    val dir = new Path(path("silver", table))
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).map(_.getPath)
-      .filter(_.getName.startsWith("v="))
-      .filter(p => fs.exists(new Path(p, "_SUCCESS")))
-      .map(_.getName.stripPrefix("v=").toLong).sorted.toSeq
-  }
+  /** Every COMMITTED silver version of `table`, ascending. */
+  def committedVersions(table: String): Seq[Long] = silverDir(table).committed
 
   /** Point-in-time read of a specific silver snapshot — merge-on-read:
     * deletion vectors (row-level deletes, GDPR erasure) are subtracted.
     * Vector-free snapshots cost one fs.exists beyond a plain scan. */
   def readSilverVersion(table: String, version: Long): DataFrame =
-    DeletionVectors.read(spark, path("silver", table) + s"/v=$version")
+    DeletionVectors.read(spark, silverDir(table).path(version).toString)
 
   /** Timestamp time travel (the `timestampAsOf` half of the reference's
     * read_delta, delta_utils.py:80 — [[readSilverVersion]] is the
     * `versionAsOf` half): reads the greatest committed version whose
-    * commit time is ≤ `tsMillis`. Commit time is the visibility moment —
-    * the instant [[committedVersions]] started listing the snapshot: the
-    * `_SUCCESS` marker's mtime, or the `_commit_ts` marker a physical
-    * rewrite ([[DeletionVectors.materialize]], e.g. a GDPR purge) carried
-    * forward in its place — so "as of T" returns exactly what a reader AT
-    * time T saw, even after every file in the snapshot was rewritten.
-    * Throws if no version was visible yet (same contract as Delta's
+    * commit instant ([[VersionedDir]]) is ≤ `tsMillis`. The instant
+    * survives a physical rewrite of the snapshot (a GDPR purge, a
+    * compaction), so "as of T" returns exactly what a reader AT time T
+    * saw. Throws if no version was visible yet (same contract as Delta's
     * timestampAsOf before the first commit). */
   def readSilverAsOf(table: String, tsMillis: Long): DataFrame = {
-    val dir = new Path(path("silver", table))
-    val visible = committedVersions(table).filter { v =>
-      DeletionVectors.commitTimeMillis(fs, new Path(dir, s"v=$v")).exists(_ <= tsMillis)
-    }
+    val visible = silverDir(table).asOf(tsMillis)
     require(visible.nonEmpty,
       s"no committed version of silver $table at or before $tsMillis")
-    readSilverVersion(table, visible.max)
+    readSilverVersion(table, visible.get)
   }
 
   /** Change-data-feed between two silver snapshots (Delta
@@ -473,7 +427,8 @@ class Medallion(spark: SparkSession, sfDir: String, warehouseDir: String) {
       SubjectScope(t.layer, t.name, "", k, t.partitionCol.toSeq, t.afterWrite)))
     scopes(bronzeTables) ++
       committedVersions(SilverOrders).map(v =>
-        SubjectScope("silver", SilverOrders, s"/v=$v", "o_custkey", Seq("order_date"))) ++
+        SubjectScope("silver", SilverOrders, "/" + VersionedDir.name(v), "o_custkey",
+          Seq("order_date"))) ++
       scopes(goldTables)
   }
 
@@ -562,11 +517,7 @@ object Medallion {
     def stage: String = s"${layer}_$name"
   }
 
-  /** Optimistic-concurrency conflict: another writer committed (or is
-    * committing) the version this writer computed against stale inputs.
-    * The Delta ConcurrentAppendException analog — callers re-read the
-    * latest snapshot and re-merge; a blind retry would replay a MERGE
-    * whose base is gone. */
-  final class ConcurrentWriteException(msg: String)
-    extends java.util.ConcurrentModificationException(msg)
+  /** Optimistic-concurrency conflict on a silver write
+    * ([[VersionedDir.ConcurrentWriteException]]). */
+  type ConcurrentWriteException = VersionedDir.ConcurrentWriteException
 }

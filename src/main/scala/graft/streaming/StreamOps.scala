@@ -156,11 +156,10 @@ object StreamOps {
     * parquet target through foreachBatch — the streaming half of the
     * medallion's idempotent silver (the reference runs Delta MERGE inside
     * its streaming jobs; versioned snapshots are our Delta-free
-    * equivalent, same scheme as pipeline.Medallion). The batch is first
-    * deduped deterministically on the merge key (a micro-batch can carry
-    * the same key twice), then source-wins-merged onto the latest
-    * snapshot; a replayed batch (checkpoint recovery) re-merges to the
-    * SAME state, so end-to-end the sink is effectively exactly-once. */
+    * equivalent). The batch is first deduped deterministically on the
+    * merge key (a micro-batch can carry the same key twice), then
+    * source-wins-merged onto the latest snapshot ([[versionedSnapshotSink]]
+    * keeps a replayed batch from folding twice). */
   def mergeSink(stream: DataFrame, keys: Seq[String], tiebreak: Seq[String],
                 targetDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -173,11 +172,15 @@ object StreamOps {
       }
     }
 
-  /** Shared snapshot-versioning scaffold for foreachBatch sinks: each
-    * micro-batch folds onto the latest COMMITTED snapshot and publishes
-    * v=N+1 via temp-write → atomic rename (the ModelRegistry protocol), so
-    * a crash mid-write leaves only an invisible `.tmp-*` directory — a
-    * partial snapshot can never be adopted as the next batch's base. */
+  /** Shared snapshot scaffold for foreachBatch sinks: micro-batch b folds
+    * onto the latest committed snapshot below it and publishes version b+1
+    * ([[graft.util.VersionedDir]]), so a crash mid-write never leaves a
+    * partial snapshot that a later batch could adopt as its base.
+    * foreachBatch is at-least-once, so the version is keyed by the batch
+    * id: a replayed batch whose version is committed is skipped, and one
+    * whose earlier attempt crashed takes that attempt's claim over. Batch
+    * ids restart under a fresh checkpoint, so the store is bound to one
+    * checkpoint lineage (claimStoreLineage). */
   private def versionedSnapshotSink(stream: DataFrame, targetDir: String,
                                     checkpointDir: String)
       (fold: (Option[DataFrame], DataFrame) => DataFrame)
@@ -185,26 +188,16 @@ object StreamOps {
     stream.writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val s = batch.sparkSession
-        val dir = new org.apache.hadoop.fs.Path(targetDir)
-        val fs = dir.getFileSystem(s.sparkContext.hadoopConfiguration)
-        fs.mkdirs(dir)
-        val latest = {
-          val vs = fs.listStatus(dir).map(_.getPath.getName)
-            .filter(_.startsWith("v=")).map(_.stripPrefix("v=").toLong)
-          if (vs.isEmpty) None else Some(vs.max)
+        claimStoreLineage(s, targetDir, checkpointDir)
+        val store = graft.util.VersionedDir(s, targetDir)
+        val v = batchId + 1
+        if (!store.isCommitted(v)) {
+          val base = store.committed.filter(_ < v).lastOption
+          val merged = fold(base.map(b => s.read.parquet(store.path(b).toString)), batch.toDF())
+          store.recommit(v)(merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
         }
-        val merged = fold(
-          latest.map(v => s.read.parquet(s"$targetDir/v=$v")), batch.toDF())
-        val tmp = new org.apache.hadoop.fs.Path(dir,
-          s".tmp-${java.util.UUID.randomUUID()}")
-        merged.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .parquet(tmp.toString)
-        val dest = new org.apache.hadoop.fs.Path(dir,
-          s"v=${latest.getOrElse(0L) + 1}")
-        if (!fs.rename(tmp, dest))
-          throw new IllegalStateException(s"snapshot commit failed: $dest")
         ()
       }
       .start()
@@ -213,11 +206,8 @@ object StreamOps {
     * builds day-grain bottom-k-by-hash states for ITS rows only, then
     * merges them onto the latest stored snapshot (QuantileSketch.merge is
     * exactly associative, so the streamed store is bit-identical to a
-    * batch sketch of everything seen — StreamingSpec proves it). The
-    * sample side is replay-safe (merge dedups on the per-row (pri, key)
-    * identity); n_rows counts assume checkpointed exactly-once delivery,
-    * same as any streaming counter. Versioned snapshots, the mergeSink
-    * scheme. */
+    * batch sketch of everything seen — StreamingSpec proves it).
+    * Versioned snapshots, the mergeSink scheme. */
   def sketchSink(stream: DataFrame, dayCol: String, value: Column,
                  rowKey: Column, targetDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -241,8 +231,7 @@ object StreamOps {
     * same caveat as any distributed sum. Versioned snapshots via the
     * mergeSink scheme; a serving session registers the version it reads
     * with MvRewrite.register — the same publish/hot-reload seam as
-    * ModelRegistry. Row counts assume checkpointed exactly-once delivery,
-    * same as any streaming counter. */
+    * ModelRegistry. */
   def mvSink(stream: DataFrame, keys: Seq[String], specs: Seq[(String, String)],
              targetDir: String, checkpointDir: String)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -255,16 +244,16 @@ object StreamOps {
       }
     }
 
-  /** One-checkpoint-per-store guard for the batchId-keyed sinks: the
-    * `batch_<id>` overwrite is replay-idempotent only WITHIN one
-    * checkpoint lineage — batchIds restart from 0 under a fresh
-    * checkpoint dir, so a second lineage writing the same store would
-    * silently overwrite earlier slices (undercounting lines / dropping
-    * band rows). The store root carries a `_sink_checkpoint` marker
-    * naming its owning checkpoint; a writer under any other checkpoint
-    * fails its micro-batch loudly instead. Exclusive create resolves a
-    * two-writer race: the loser re-reads and compares. Driver-side file
-    * metadata only. */
+  /** One-checkpoint-per-store guard for the batchId-keyed sinks: a
+    * batch-keyed write is replay-idempotent only WITHIN one checkpoint
+    * lineage — batchIds restart from 0 under a fresh checkpoint dir, so a
+    * second lineage writing the same store would silently overwrite
+    * earlier slices (undercounting lines / dropping band rows) or skip its
+    * batches as already committed. The store root carries a
+    * `_sink_checkpoint` marker naming its owning checkpoint; a writer
+    * under any other checkpoint fails its micro-batch loudly instead.
+    * Exclusive create resolves a two-writer race: the loser re-reads and
+    * compares. Driver-side file metadata only. */
   private def claimStoreLineage(spark: org.apache.spark.sql.SparkSession,
                                 storePath: String, checkpointDir: String): Unit = {
     import org.apache.hadoop.fs.Path
@@ -287,9 +276,9 @@ object StreamOps {
     val have = owner()
     require(have == checkpointDir,
       s"store $storePath is owned by checkpoint '$have'; refusing writes from " +
-        s"'$checkpointDir' — batch_<id> slices are replay-idempotent only within " +
+        s"'$checkpointDir' — batch-keyed writes are replay-idempotent only within " +
         "one checkpoint lineage (restarting with a fresh checkpoint against an " +
-        "existing store would overwrite earlier slices)")
+        "existing store would overwrite or skip earlier batches)")
   }
 
   /** Shared foreachBatch scaffold for the store sinks: `write` gets every

@@ -381,6 +381,69 @@ class MedallionSpec extends SparkSpec {
     assert(m.vacuumSilver("absent_table").isEmpty)
   }
 
+  /** A fresh warehouse holding silver table `t`: ten rows (k, amount, d)
+    * upserted `versions` times, one committed version each. */
+  private def smallSilver(prefix: String, versions: Int): (String, Medallion, DataFrame) = {
+    import spark.implicits._
+    val wh = java.nio.file.Files.createTempDirectory(prefix).toString
+    val m = new Medallion(spark, TinySf, wh)
+    val rows = (1L to 10L).map(k => (k, k * 1.5, s"2024-01-0${k % 3 + 1}")).toDF("k", "amount", "d")
+      .withColumn("d", col("d").cast("date"))
+    (1 to versions).foreach(_ => m.upsertSilver("t", rows, Seq("k"), "d"))
+    (wh, m, rows)
+  }
+
+  test("vacuum counts committed versions only: a crashed newer snapshot " +
+    "cannot push the current one out") {
+    val (wh, m, rows) = smallSilver("graft_wh_vac_ghost", versions = 2)
+    // a crashed v=3 holding one part file and no _SUCCESS
+    val ghost = new java.io.File(s"$wh/silver/t/v=3")
+    assert(ghost.mkdirs())
+    new java.io.FileOutputStream(new java.io.File(ghost, "part-x.parquet")).close()
+    assert(m.vacuumSilver("t", keep = 1) == Seq(1L))
+    assert(m.latestVersion("t").contains(2L))
+    assert(m.readSilver("t").count() == rows.count())
+    // a stranded staging sibling whose name only starts like a version
+    assert(new java.io.File(s"$wh/silver/t/v=2_compact_tmp").mkdirs())
+    assert(m.vacuumSilver("t", keep = 1).isEmpty)
+    assert(m.latestVersion("t").contains(2L))
+  }
+
+  test("a silver write that fails after its claim releases the version: " +
+    "the next upsert commits it") {
+    val (_, m, rows) = smallSilver("graft_wh_fail", versions = 1)
+    // no `checks`: enforce would fail the batch before the claim; this one
+    // fails only when the write executes
+    val failing = rows.withColumn("amount",
+      raise_error(lit("injected write failure")).cast("double"))
+    intercept[Exception](m.upsertSilver("t", failing, Seq("k"), "d"))
+    assert(m.latestVersion("t").contains(1L))
+    assert(m.upsertSilver("t", rows.withColumn("amount", col("amount") + 1.0),
+      Seq("k"), "d") == 2L)
+    assert(m.latestVersion("t").contains(2L))
+    assert(m.readSilver("t").filter(col("_merge_action") === "updated").count() == 10L)
+  }
+
+  test("compaction keeps a snapshot's commit instant: as-of reads still resolve") {
+    import graft.pipeline.Compaction
+    val (wh, m, _) = smallSilver("graft_wh_compact_asof", versions = 1)
+    def rows(df: DataFrame) = {
+      val cols = df.columns.sorted.toSeq
+      df.select(cols.map(col): _*).orderBy("k").collect().toSeq
+    }
+    val v1 = rows(m.readSilverVersion("t", 1L))
+    val t1 = 1000000L
+    org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .setTimes(new org.apache.hadoop.fs.Path(s"$wh/silver/t/v=1/_SUCCESS"), t1, -1)
+
+    assert(Compaction.compact(spark, s"$wh/silver/t/v=1", targetBytes = 64L << 20) >= 1)
+    assert(rows(m.readSilverAsOf("t", t1)) == v1)
+    intercept[IllegalArgumentException](m.readSilverAsOf("t", t1 - 1))
+    // the swap left only the version and its claims behind
+    assert(new java.io.File(s"$wh/silver/t").list().toSet == Set("v=1", "_commits"),
+      new java.io.File(s"$wh/silver/t").list().mkString(", "))
+  }
+
   test("silver change feed is empty across an idempotent re-run") {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh5").toString
     val m = new Medallion(spark, TinySf, wh)

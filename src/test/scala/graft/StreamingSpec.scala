@@ -764,6 +764,77 @@ class StreamingSpec extends SparkSpec {
       .filter(col("_merge_action") === "updated").count() > 0)
   }
 
+  /** A file-source mvSink over TinySf lineitem, fed two micro-batches (even
+    * and odd orders): returns the store, its checkpoint, a restart on that
+    * checkpoint run to completion, and the batch build over both halves. */
+  private def mvStore(root: String) = {
+    val keys = Seq("l_returnflag", "l_linestatus")
+    val specs = Seq(("sum", "l_quantity"), ("min", "l_discount"), ("max", "l_discount"))
+    val li = Tables.lineitem(spark, TinySf).select(col("l_returnflag"),
+      col("l_linestatus"), col("l_quantity"), col("l_discount"), col("l_orderkey"))
+    val (src, store, ckpt) = (s"$root/src", s"$root/mv", s"$root/ckpt")
+    def start(checkpoint: String) = StreamOps.mvSink(
+      spark.readStream.schema(li.schema).parquet(src), keys, specs, store, checkpoint)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy(keys.map(col): _*).collect().toSeq
+    def land(half: org.apache.spark.sql.Column): Unit =
+      li.filter(half).coalesce(1).write.mode("append").parquet(src)
+    land(col("l_orderkey") % 2 === 0) // the file source needs its directory
+    val q = start(ckpt)
+    try {
+      q.processAllAvailable()
+      land(col("l_orderkey") % 2 === 1)
+      q.processAllAvailable()
+    } finally q.stop()
+    val built = sorted(graft.plans.MvRewrite.partialStates(li.drop("l_orderkey"), keys, specs))
+    (store, ckpt, start _, (v: Long) => sorted(spark.read.parquet(s"$store/v=$v")), built)
+  }
+
+  test("a replayed snapshot-sink micro-batch folds once; a crashed attempt " +
+    "of it is taken over") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_replay").toString
+    val (store, ckpt, start, snapshot, built) = mvStore(root)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    def path(p: String) = new org.apache.hadoop.fs.Path(p)
+    def versions = new java.io.File(store).list().filter(_.startsWith("v=")).sorted.toSeq
+    assert(versions == Seq("v=1", "v=2") && snapshot(2L) == built)
+
+    // foreachBatch is at-least-once: batch 1 ran, but its commit was not
+    // recorded, so a restart delivers it again
+    def replayBatch1(): Unit = {
+      assert(fs.delete(path(s"$ckpt/commits/1"), false))
+      val q = start(ckpt)
+      try q.processAllAvailable() finally q.stop()
+    }
+    replayBatch1()
+    assert(versions == Seq("v=1", "v=2"), "a replayed batch published a new version")
+    assert(snapshot(2L) == built, "a replayed batch was folded twice")
+
+    // a crash mid-write of batch 1: v=2 holds a claim and part of its files,
+    // no _SUCCESS; the replay takes the claim over and rewrites it whole
+    val v2 = new java.io.File(s"$store/v=2")
+    assert(fs.delete(path(s"$store/v=2/_SUCCESS"), false))
+    v2.listFiles().filter(_.getName.endsWith(".parquet")).take(1)
+      .foreach(f => assert(fs.delete(path(f.getPath), false)))
+    replayBatch1()
+    assert(versions == Seq("v=1", "v=2"))
+    assert(snapshot(2L) == built, "the taken-over batch diverged from the batch build")
+  }
+
+  test("a second checkpoint lineage against a snapshot store fails loudly") {
+    val root = java.nio.file.Files.createTempDirectory("graft_snap_lineage").toString
+    val (store, _, start, snapshot, built) = mvStore(root)
+    val q = start(s"$root/ckpt_other")
+    try {
+      val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+      assert(ex.getMessage.contains("owned by checkpoint"), ex.getMessage)
+    } finally q.stop()
+    assert(new java.io.File(store).list().filter(_.startsWith("v=")).sorted.toSeq ==
+      Seq("v=1", "v=2"))
+    assert(snapshot(2L) == built, "the rejected lineage touched the store")
+  }
+
   test("streaming sketch maintenance equals a batch sketch of everything seen") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
